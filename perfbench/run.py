@@ -14,6 +14,7 @@ import argparse
 import glob
 import hashlib
 import json
+import math
 import os
 import shutil
 import signal
@@ -38,6 +39,9 @@ TRICKLE_DOCS_PER_S = 200    # docs released per second in stream_trickle
 # gated, and more would double the traced run.
 WARM_PASSES = 5
 WARM_PASSES_TRICKLE = 3
+# A traced backfill run (not gated) gets fewer, to leave time for the
+# single-core JVM and the query layer.
+WARM_PASSES_TRACED = 2
 WARM_PASSES_1C = 1
 HEAP = "2g"
 JVM_TIMEOUT_S = 170
@@ -176,9 +180,47 @@ def wall_metrics(rows_per_s, lat):
     return m
 
 
+def reads_layer(res):
+    reads = res["samples.sink.read_ms"]
+    return {"sink.read_p50_ms": stats.percentile(reads, 50),
+            "sink.read_p90_ms": stats.percentile(reads, 90),
+            "sink.snapshots_ms": stats.median(res["samples.sink.snapshots_ms"])}
+
+
+def pipeline_layer(cp, work, a, nproc, deadline, res, corpus):
+    """Figures of whole AvailableNow passes over a staged corpus: the
+    local[nproc] rate of the untraced attempts in `res` against the same
+    corpus at local[1] in a second JVM, and the tracing overhead (traced
+    over untraced attempts' median wall, minus 1)."""
+    one = jvm(cp, work, "backfill", 1,
+              ["--seed", a.seed, "--seconds", 0, "--trace", 0,
+               "--warm", WARM_PASSES_1C, "--input", corpus], deadline)
+    rate = stats.median([x["rows"] / x["wall_s"] for x in res["attempts"]])
+    rate_1c = stats.median([x["rows"] / x["wall_s"] for x in one["attempts"]])
+    m = {"rows_per_s_1c": rate_1c,
+         "scaling_eff_1to4": rate / (nproc * rate_1c),
+         "trace_overhead_frac": (stats.median([x["wall_s"] for x in res["traced_attempts"]])
+                                 / stats.median([x["wall_s"] for x in res["attempts"]]) - 1.0)}
+    return m, one
+
+
+def query_tables(a, work):
+    """Writes the seed's query tables; returns their directory and table set."""
+    import gen_tables
+    variant = a.seed % gen_tables.VARIANTS
+    # TokenEngine reads the scale factor from the directory name
+    tables = os.path.join(work, "tables-sf0.001")
+    gen_tables.write(variant, tables)
+    return tables, variant
+
+
 def stream_backfill(cp, work, a, nproc, deadline):
     args = ["--seed", a.seed, "--seconds", a.seconds, "--trace", a.trace, "--docs", BACKFILL_DOCS,
-            "--warm", WARM_PASSES]
+            "--warm", WARM_PASSES_TRACED if a.trace else WARM_PASSES]
+    if a.trace:
+        # the query layer runs in the same JVM, after the stream
+        tables, variant = query_tables(a, work)
+        args += ["--queries", tables]
     res = jvm(cp, work, "backfill", nproc, args, deadline)
     rates = [x["rows"] / x["wall_s"] for x in res["attempts"]]
     cpu = [x["cpu_ms"] / x["rows"] * 1000 for x in res["attempts"]]
@@ -188,56 +230,57 @@ def stream_backfill(cp, work, a, nproc, deadline):
                         latency_samples([t for x in res["attempts"] for t in x["latency"]]))
     if not a.trace:
         return {"cpu_ms_per_krow": stats.median(cpu)}, [res]
-    # the single-core baseline: untraced, over the corpus staged above
-    one = jvm(cp, work, "backfill", 1,
-              ["--seed", a.seed, "--seconds", a.seconds, "--trace", 0, "--docs", BACKFILL_DOCS,
-               "--warm", WARM_PASSES_1C,
-               "--input", os.path.join(work, f"backfill-{nproc}", "input")], deadline)
-    m = dict(res["layers"], **res["micro"], **sink_layer(res), **wall)
-    m["rows_per_s_1c"] = stats.median([x["rows"] / x["wall_s"] for x in one["attempts"]])
-    m["scaling_eff_1to4"] = m["rows_per_s"] / (nproc * m["rows_per_s_1c"])
-    m["trace_overhead_frac"] = (stats.median([x["wall_s"] for x in res["traced_attempts"]])
-                                / stats.median([x["wall_s"] for x in res["attempts"]]) - 1.0)
+    m = dict(res["layers"], **res["micro"], **sink_layer(res), **reads_layer(res), **wall)
+    # the single-core baseline, over the corpus staged above
+    p, one = pipeline_layer(cp, work, a, nproc, deadline, res,
+                            os.path.join(work, f"backfill-{nproc}", "input"))
+    m.update(p, **query_metrics(a, res, variant))
     return m, [res, one]
 
 
 def stream_trickle(cp, work, a, nproc, deadline):
     docs = int(TRICKLE_DOCS_PER_S * a.seconds)
-    res = jvm(cp, work, "trickle", nproc,
-              ["--seed", a.seed, "--seconds", a.seconds, "--trace", a.trace, "--docs", docs,
-               "--warm", WARM_PASSES_TRICKLE], deadline)
+    args = ["--seed", a.seed, "--seconds", a.seconds, "--trace", a.trace, "--docs", docs,
+            "--warm", WARM_PASSES_TRICKLE]
+    if a.trace:
+        tables, variant = query_tables(a, work)
+        args += ["--queries", tables]
+    res = jvm(cp, work, "trickle", nproc, args, deadline)
     cpu = res["cpu_ms"] / res["rows"] * 1000
-    log(f"cpu ms/krow {cpu:.1f}, steal {res['steal_frac']:.3f}")
+    log(f"cpu ms/krow {cpu:.1f}, steal {res['steal_frac']:.3f}, "
+        f"release lateness max {res['gen_late_ms_max']:.0f} ms")
     lat = [stats.latency_s(c, d, res["delay_ms"], res["gap_ms"]) for c, d in res["doc_commits"]]
     wall = wall_metrics(res["rows"] / ((res["last_commit_ms"] - res["t0_ms"]) / 1000.0), lat)
     if not a.trace:
         return {"cpu_ms_per_krow": cpu}, [res]
-    reads = res["samples.sink.read_ms"]
-    m = dict(res["layers"], **sink_layer(res), **wall)
-    m["sink.read_p50_ms"] = stats.percentile(reads, 50)
-    m["sink.read_p90_ms"] = stats.percentile(reads, 90)
-    m["sink.snapshots_ms"] = stats.median(res["samples.sink.snapshots_ms"])
-    # the query layer, measured here after the stream (see WORKLOADS)
-    q, qres = query_suite(cp, work, a, nproc, deadline, seconds=0)
-    m.update({k: v for k, v in q.items() if k.startswith("query.")})
-    return m, [res] + qres
+    m = dict(res["layers"], **res["micro"], **sink_layer(res), **reads_layer(res), **wall)
+    # whole-pipeline figures over the warm-up corpus (see Trickle.scala)
+    p, one = pipeline_layer(cp, work, a, nproc, deadline, res,
+                            os.path.join(work, f"trickle-{nproc}", "warm"))
+    m.update(p, **query_metrics(a, res, variant))
+    return m, [res, one]
 
 
-def query_suite(cp, work, a, nproc, deadline, seconds=None):
-    """One warm, checked pass, then measured passes for `seconds` (--seconds
-    by default; 0 measures one pass)."""
-    import gen_tables
-    variant = a.seed % gen_tables.VARIANTS
+def query_suite(cp, work, a, nproc, deadline):
+    """One warm, checked pass, then measured passes for --seconds."""
     t0 = time.monotonic()
-    # TokenEngine reads the scale factor from the directory name
-    tables = os.path.join(work, "tables-sf0.001")
-    gen_tables.write(variant, tables)
+    tables, variant = query_tables(a, work)
     gen_s = time.monotonic() - t0
     res = jvm(cp, work, "queries", nproc,
-              ["--seed", a.seed, "--seconds", a.seconds if seconds is None else seconds,
-               "--trace", a.trace, "--input", tables],
+              ["--seed", a.seed, "--seconds", a.seconds, "--trace", a.trace, "--input", tables],
               deadline)
     res["setup_s"] += gen_s
+    m = query_metrics(a, res, variant)
+    if a.trace:
+        m.update({k: v for k, v in res["query_layers"].items() if k not in m})
+    return m, [res]
+
+
+def query_metrics(a, res, variant):
+    """Checks a JVM's query results against the recorded row counts and
+    digests of its table set (counting each query as one operation) and
+    returns the query layer's metrics: per-query seconds (median over the
+    measured passes), their sum, and with tracing the job and stage counts."""
     with open(os.path.join(HERE, "expected_queries.json")) as f:
         want = json.load(f).get(str(variant), {})
     for q in res["queries"]:
@@ -255,8 +298,8 @@ def query_suite(cp, work, a, nproc, deadline, seconds=None):
     m = {f"query.{n}_s": t for n, t in secs.items()}
     m["query.total_s"] = sum(secs.values())
     if a.trace:
-        m.update(res["layers"])
-    return m, [res]
+        m.update({k: v for k, v in res["query_layers"].items() if k.startswith("query.")})
+    return m
 
 
 def record_expected(a, results):
@@ -321,18 +364,21 @@ def main():
     for r in results:
         for f in r["failures"]:
             log(f"FAIL {f}")
-    if a.trace:
-        wanted = [x for x in spec["per_layer"] if x["name"] in m]
-    else:
+    if not a.trace:
         m["setup_s"] = stats.median([r["setup_s"] for r in results])
         m["peak_rss_mb"] = max(r["peak_rss_mb"] for r in results)
-        wanted = spec["end_to_end"]
-        if a.workload not in [w["name"] for w in spec["workloads"]]:
-            # a workload run by hand: whatever it measured, by name
-            wanted = [x for x in spec["end_to_end"] + spec["per_layer"] if x["name"] in m]
-        missing = [x["name"] for x in wanted if x["name"] not in m]
-        if missing:
-            raise SystemExit(f"perfbench: metrics not measured: {missing}")
+    wanted = spec["per_layer"] if a.trace else spec["end_to_end"]
+    if a.workload not in [w["name"] for w in spec["workloads"]]:
+        # a workload run by hand: whatever it measured, by name
+        wanted = [x for x in spec["end_to_end"] + spec["per_layer"] if x["name"] in m]
+    # every workload of BENCHMARK.json reports every metric of its kind
+    missing = [x["name"] for x in wanted if x["name"] not in m]
+    if missing:
+        raise SystemExit(f"perfbench: metrics not measured: {missing}")
+    bad = [x["name"] for x in wanted
+           if not isinstance(m[x["name"]], (int, float)) or not math.isfinite(m[x["name"]])]
+    if bad:
+        raise SystemExit(f"perfbench: metrics without a finite value: {bad}")
     log(f"failed_frac {stats.failed_frac(failed, attempted):.6f} ({failed} of {attempted})")
     print(json.dumps({
         "correct": failed == 0,

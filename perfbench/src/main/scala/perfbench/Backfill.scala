@@ -64,77 +64,80 @@ object Backfill {
 
   def run(spark: SparkSession, o: Opts, rep: Report): Double = {
     val (in, expected) = inputs(spark, o)
-    val mfpt = parquetFiles(in.resolve("corpus/p1")).size
     rep.put("expected_rows", expected)
-    var k = 0
-    def attempt(traced: Boolean): Attempt = {
-      k += 1
-      val a = new Attempt(spark, o, in.toString, mfpt, k, traced)
-      a.run()
-      rep.check(s"attempt $k rows", a.rows == expected, s"sink rows ${a.rows} != expected $expected")
-      a
-    }
     // warm: untimed attempts while the JIT compiles the hot paths (CPU per
     // row still falls over the first five to eight attempts)
-    (1 to o.warm).foreach(_ => attempt(traced = false).cleanup())
+    val attempts = new Attempts(spark, o, in, expected, rep)
+    (1 to o.warm).foreach(_ => attempts.next(traced = false).cleanup())
     val setupS = Harness.uptimeS()
 
     val cpu0 = Harness.cpuJiffies()
-    val t0 = System.nanoTime()
-    def elapsed = (System.nanoTime() - t0) / 1e9
-    val untraced = mutable.ArrayBuffer.empty[Attempt]
-    val traced = mutable.ArrayBuffer.empty[Attempt]
-    // at least four attempts per kind, then until the time is spent; a
-    // traced run alternates untraced and traced attempts
-    while (untraced.size < 4 || elapsed < o.seconds) {
-      val u = attempt(traced = false)
-      u.cleanup()
-      untraced += u
-      if (o.trace) {
-        val t = attempt(traced = true)
-        if (traced.nonEmpty) traced.last.cleanup()
-        traced += t
-      }
-    }
+    val (untraced, traced) = attempts.measure(o.seconds, o.trace, min = 4)
     rep.stealSince(cpu0)
-    rep.put("attempts", untraced.map(a => Map("wall_s" -> a.wallS, "rows" -> a.rows, "cpu_ms" -> a.cpuMs,
-      "latency" -> a.latency)).toSeq)
     if (o.trace) {
-      rep.put("traced_attempts", traced.map(a => Map("wall_s" -> a.wallS, "rows" -> a.rows)).toSeq)
       val last = traced.last
       rep.check("traced plan shape equals StreamJob.run's",
         last.plan == untraced.last.plan,
         s"traced ${last.plan.mkString(",")} vs untraced ${untraced.last.plan.mkString(",")}")
-      val mismatch = oracleCheck(spark, in, last, rep)
-      val layers = traced.map(_.layers).toSeq
-      rep.put("layers", layers.head.keys.map(key => key -> Harness.median(layers.map(_(key)))).toMap +
-        ("stitch.event_time_mismatch_rows" -> mismatch))
-      rep.put("samples.batch.trigger_ms", traced.flatMap(_.triggerMs).toSeq)
-      rep.put("samples.sink.append_ms", traced.flatMap(_.appendMs).toSeq)
-      rep.put("samples.sink.job_ms", traced.flatMap(_.jobMs).toSeq)
+      import spark.implicits._
+      val frags = spark.read.parquet(in.resolve("corpus/p1").toString).as[Fragment]
+      val mismatch = Streams.oracleCheck(spark, frags, last.table, rep)
+      val layers = traced.map(_.layers)
+      rep.put("layers", layers.head.keys.map(key => key -> Harness.median(layers.map(_(key)))).toMap ++ Map(
+        "stitch.event_time_mismatch_rows" -> mismatch,
+        // staging filters late fragments out, so none is released and none
+        // can be dropped: observed drops are the late fragments in the corpus
+        "stitch.dropped_observed" -> frags.filter(_.is_late).count().toDouble))
+      rep.put("samples.batch.trigger_ms", traced.flatMap(_.triggerMs))
+      rep.put("samples.sink.append_ms", traced.flatMap(_.appendMs))
+      rep.put("samples.sink.job_ms", traced.flatMap(_.jobMs))
+      rep.put("samples.sink.snapshots_ms", traced.flatMap(_.snapshotsMs))
+      rep.put("samples.sink.read_ms", traced.flatMap(_.readMs))
       last.cleanup()
       Micro.run(spark, o, rep)
     }
     setupS
   }
 
-  /** Token arrays and every extracted column of the traced attempt's sink
-    * equal StreamJob.batchOracle over the same fragments. `event_time` is
-    * compared apart: the stitcher keeps whichever copy of a duplicated page
-    * it meets first in a micro-batch, while the oracle keeps the earliest, so
-    * the rows of a duplicated doc can differ there only; their number is
-    * reported as a layer figure, not as a failure. */
-  private def oracleCheck(spark: SparkSession, in: Path, a: Attempt, rep: Report): Double = {
-    import spark.implicits._
-    val frags = spark.read.parquet(in.resolve("corpus/p1").toString).as[Fragment]
-    val oracle = StreamJob.batchOracle(spark, frags, spec)
-    val sink = Streams.rows(spark, a.table).select(oracle.columns.map(col).toSeq: _*)
-    val cols = oracle.columns.filter(_ != "event_time").map(col).toSeq
-    val extra = sink.select(cols: _*).exceptAll(oracle.select(cols: _*)).count()
-    val missing = oracle.select(cols: _*).exceptAll(sink.select(cols: _*)).count()
-    rep.check("sink equals StreamJob.batchOracle (token arrays and extracted columns)",
-      extra == 0 && missing == 0, s"$extra rows not in the oracle, $missing oracle rows missing")
-    sink.exceptAll(oracle).count().toDouble
+  /** Successive attempts over the corpus in `in`, each checked against the
+    * expected row count. */
+  final class Attempts(spark: SparkSession, o: Opts, in: Path, expected: Long, rep: Report) {
+    private val mfpt = parquetFiles(in.resolve("corpus/p1")).size
+    private var k = 0
+
+    def next(traced: Boolean): Attempt = {
+      k += 1
+      val a = new Attempt(spark, o, in.toString, mfpt, k, traced)
+      a.run()
+      rep.check(s"attempt $k rows", a.rows == expected, s"sink rows ${a.rows} != expected $expected")
+      a
+    }
+
+    /** At least `min` untraced attempts, then until `seconds` are spent;
+      * when `trace`, a traced attempt follows each untraced one. Reports
+      * both kinds (`attempts`, `traced_attempts`) and returns them; the
+      * last traced attempt's table is kept, the caller cleans it up. */
+    def measure(seconds: Double, trace: Boolean, min: Int): (Seq[Attempt], Seq[Attempt]) = {
+      val t0 = System.nanoTime()
+      def elapsed = (System.nanoTime() - t0) / 1e9
+      val untraced = mutable.ArrayBuffer.empty[Attempt]
+      val traced = mutable.ArrayBuffer.empty[Attempt]
+      while (untraced.size < min || elapsed < seconds) {
+        val u = next(traced = false)
+        u.cleanup()
+        untraced += u
+        if (trace) {
+          val t = next(traced = true)
+          if (traced.nonEmpty) traced.last.cleanup()
+          traced += t
+        }
+      }
+      rep.put("attempts", untraced.map(a => Map("wall_s" -> a.wallS, "rows" -> a.rows, "cpu_ms" -> a.cpuMs,
+        "latency" -> a.latency)).toSeq)
+      if (trace)
+        rep.put("traced_attempts", traced.map(a => Map("wall_s" -> a.wallS, "rows" -> a.rows)).toSeq)
+      (untraced.toSeq, traced.toSeq)
+    }
   }
 
   /** One pass of the corpus through a fresh checkpoint and sink. */
@@ -151,6 +154,8 @@ object Backfill {
     var triggerMs: Seq[Double] = Nil
     var appendMs: Seq[Double] = Nil
     var jobMs: Seq[Double] = Nil
+    var snapshotsMs: Seq[Double] = Nil
+    var readMs: Seq[Double] = Nil
 
     def run(): Unit = {
       val frags = StreamJob.fileSource(spark, s"$in/corpus/*", maxFilesPerTrigger = mfpt)
@@ -182,10 +187,15 @@ object Backfill {
       if (traced) {
         layers = Probe.progressMetrics(ps) ++ probe.shuffleMetrics ++
           probe.cpuMetrics(wall, o.cpus, Probe.gcMs() - gc0) ++
-          Streams.sinkLayer(table, root.resolve("table"), calls.toSeq)
+          Streams.sinkLayer(table, root.resolve("table"), calls.toSeq) +
+          ("source.lag_files_max" -> Streams.maxFilesPerBatch(root.resolve("ck/sources/0")).toDouble)
         triggerMs = Probe.triggerMs(ps)
         appendMs = calls.map(_.wallMs).toSeq
         jobMs = calls.map(c => probe.jobWallMs(c.span).toDouble).toSeq
+        // reads of the finished table (no writer beside them, unlike the trickle's reader)
+        val (snaps, reads) = Streams.timedReads(spark, table, 3)
+        snapshotsMs = snaps
+        readMs = reads
       }
     }
 

@@ -18,7 +18,8 @@ final case class Opts(
     out: Path,
     docs: Long,
     warm: Int,
-    input: Option[String]) {
+    input: Option[String],
+    queries: Option[String]) {
   /** Doc-index offset of this seed's corpus window. TokenGen's doc classes
     * (duplicates, late docs, multi-page docs) repeat every 100 indices, so
     * any window starting on a multiple of 100 has the same class mix. */
@@ -38,7 +39,8 @@ object Opts {
       out = Paths.get(kv("out")),
       docs = kv.getOrElse("docs", "0").toLong,
       warm = kv.getOrElse("warm", "1").toInt,
-      input = kv.get("input"))
+      input = kv.get("input"),
+      queries = kv.get("queries"))
   }
 }
 

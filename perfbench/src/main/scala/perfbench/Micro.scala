@@ -23,6 +23,8 @@ import graft.streaming.{AssembledDoc, StitchState}
 object Micro {
   private val Reps = 5
   private val MinRepNs = 50000000L
+  /** Docs of the seed's corpus window the loops run over, the same on every workload. */
+  private val Docs = 20000L
 
   /** Sum of every pass's result, reported, so no loop can be optimised away. */
   private var checksum = 0L
@@ -42,8 +44,7 @@ object Micro {
 
   def run(spark: SparkSession, o: Opts, rep: Report): Unit = {
     val cdf = TokenGen.zipfCdf(32)
-    val n = math.min(o.docs, 20000L)
-    val docs: Seq[Seq[Fragment]] = (o.docBase until o.docBase + n).map(i =>
+    val docs: Seq[Seq[Fragment]] = (o.docBase until o.docBase + Docs).map(i =>
       TokenGen.docFragments(i, cdf).filter(f => !f.is_dup && !f.is_late)).filter(_.nonEmpty)
     val fragToks = docs.map(_.map(_.tokens.length.toLong).sum).sum
 

@@ -57,7 +57,7 @@ object QuerySuite {
     if (o.trace) {
       val jobs = probe.jobs.values.toSeq
       def jobsOf(n: String) = jobs.filter(_.span == n)
-      rep.put("layers", probe.shuffleMetrics ++ probe.cpuMetrics(wallS, o.cpus, Probe.gcMs() - gc0) ++ Map(
+      rep.put("query_layers", probe.shuffleMetrics ++ probe.cpuMetrics(wallS, o.cpus, Probe.gcMs() - gc0) ++ Map(
         "query.jobs_total" -> jobs.size.toDouble / passes.size,
         "query.stages_total" -> jobs.map(_.stages).sum.toDouble / passes.size,
         "query.shuffle_bytes_total" -> probe.shuffleWrite.toDouble / passes.size,

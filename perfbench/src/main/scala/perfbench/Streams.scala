@@ -1,6 +1,9 @@
 package perfbench
 
+import java.nio.file.{Files, Path}
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -8,6 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.gen.Fragment
 import graft.model.ExtractionSpec
+import graft.queries.TokenEngine
 import graft.sink.ResultTable
 import graft.streaming.{Stitch, StreamJob}
 
@@ -49,6 +53,52 @@ object Streams {
   /** Rows of a finished table without the flush docs (doc ids "~…"). */
   def rows(spark: SparkSession, table: ResultTable): DataFrame =
     table.read(spark).filter(!col("doc_id").startsWith("~"))
+
+  /** Token arrays and every extracted column of `table` equal
+    * StreamJob.batchOracle over `frags`, the on-time fragments that went in.
+    * `event_time` is compared apart: the stitcher keeps whichever copy of a
+    * duplicated page it meets first in a micro-batch, while the oracle keeps
+    * the earliest, so the rows of a duplicated doc can differ there only;
+    * their number is returned as a layer figure, not counted as a failure. */
+  def oracleCheck(spark: SparkSession, frags: Dataset[Fragment], table: ResultTable, rep: Report): Double = {
+    val oracle = StreamJob.batchOracle(spark, frags, TokenEngine.flagshipSpec)
+    val sink = rows(spark, table).select(oracle.columns.map(col).toSeq: _*)
+    val cols = oracle.columns.filter(_ != "event_time").map(col).toSeq
+    val extra = sink.select(cols: _*).exceptAll(oracle.select(cols: _*)).count()
+    val missing = oracle.select(cols: _*).exceptAll(sink.select(cols: _*)).count()
+    rep.check("sink equals StreamJob.batchOracle (token arrays and extracted columns)",
+      extra == 0 && missing == 0, s"$extra rows not in the oracle, $missing oracle rows missing")
+    sink.exceptAll(oracle).count().toDouble
+  }
+
+  /** `n` timed reads of a table: (ms of each `snapshots()` call, ms of each
+    * `snapshots()` plus `read(spark).count()`). */
+  def timedReads(spark: SparkSession, table: ResultTable, n: Int): (Seq[Double], Seq[Double]) =
+    Seq.fill(n) {
+      val t0 = System.nanoTime()
+      table.snapshots()
+      val t1 = System.nanoTime()
+      table.read(spark).count()
+      ((t1 - t0) / 1e6, (System.nanoTime() - t0) / 1e6)
+    }.unzip
+
+  def listFiles(d: Path): Seq[Path] =
+    scala.util.Using.resource(Files.list(d))(_.iterator().asScala.toSeq.sortBy(_.toString))
+
+  /** Most files any one micro-batch read, from the file source's own log
+    * (`<checkpoint>/sources/0`). */
+  def maxFilesPerBatch(log: Path): Int = {
+    val batchOf = "\"batchId\":(\\d+)".r
+    val pathOf = "\"path\":\"([^\"]+)\"".r
+    val seen = mutable.HashMap.empty[Long, mutable.Set[String]]
+    listFiles(log).filterNot(_.getFileName.toString.startsWith(".")).foreach { f =>
+      Files.readAllLines(f).asScala.foreach { line =>
+        for (b <- batchOf.findFirstMatchIn(line); p <- pathOf.findFirstMatchIn(line))
+          seen.getOrElseUpdate(b.group(1).toLong, mutable.Set.empty) += p.group(1)
+      }
+    }
+    seen.values.map(_.size).maxOption.getOrElse(0)
+  }
 
   /** Sink-layer counts and sizes of a traced run. Per-call times go to
     * run.py as raw samples (append wall, and the Spark job wall inside it). */

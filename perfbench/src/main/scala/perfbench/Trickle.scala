@@ -79,9 +79,9 @@ object Trickle {
       .coalesce(1).write.partitionBy("slot").parquet(pre.toString)
     val slotFiles: Map[Int, Seq[Path]] = (0 to flushSlot)
       .filter(s => Files.isDirectory(pre.resolve(s"slot=$s")))
-      .map(s => s -> listFiles(pre.resolve(s"slot=$s")).filter(_.toString.endsWith(".parquet"))).toMap
+      .map(s => s -> Streams.listFiles(pre.resolve(s"slot=$s")).filter(_.toString.endsWith(".parquet"))).toMap
 
-    warm(spark, o)
+    val (warmDir, warmExpected) = warm(spark, o)
     val setupS = Harness.uptimeS()
 
     val src = Files.createDirectories(o.work.resolve("src"))
@@ -148,6 +148,7 @@ object Trickle {
     rep.put("samples.sink.read_ms", reads.readMs.toSeq)
     rep.put("samples.sink.snapshots_ms", reads.snapshotsMs.toSeq)
     reads.checks.foreach { case (ok, detail) => rep.check("reader count never decreases", ok, detail) }
+    rep.put("gen_late_ms_max", lateness.max)
 
     if (o.trace) {
       val lateReleased = docs.count(_.latePage.isDefined)
@@ -155,20 +156,31 @@ object Trickle {
       rep.put("layers", Probe.progressMetrics(batches) ++ probe.shuffleMetrics ++
         probe.cpuMetrics(wallS, o.cpus, Probe.gcMs() - gc0) ++
         Streams.sinkLayer(table, root.resolve("table"), calls.toSeq) ++ Map(
-          "source.lag_files_max" -> maxFilesPerBatch(root.resolve("ck/sources/0")).toDouble,
-          "source.gen_late_ms_max" -> lateness.max,
-          "stitch.dropped_observed" -> (lateReleased - lateFound).toDouble))
+          "source.lag_files_max" -> Streams.maxFilesPerBatch(root.resolve("ck/sources/0")).toDouble,
+          "stitch.dropped_observed" -> (lateReleased - lateFound).toDouble,
+          "stitch.event_time_mismatch_rows" -> Streams.oracleCheck(spark,
+            frags.map(_._2).filter(f => !f.is_late && f.doc_id != "~flush").toSeq.toDS(), table, rep)))
       rep.put("samples.batch.trigger_ms", Probe.triggerMs(batches))
       rep.put("samples.sink.append_ms", calls.map(_.wallMs).toSeq)
       rep.put("samples.sink.job_ms", calls.map(c => probe.jobWallMs(c.span).toDouble).toSeq)
+      // The whole-pipeline figures the open loop cannot give: untraced and
+      // traced AvailableNow passes over the warm-up corpus, alternated (the
+      // local[nproc] rate for scaling_eff_1to4, and the tracing overhead;
+      // run.py runs the same corpus at local[1]), and the Spark-free
+      // stitch and kernel loops.
+      val (_, last) = new Backfill.Attempts(spark, o, warmDir, warmExpected, rep)
+        .measure(seconds = 0, trace = true, min = 3)
+      last.last.cleanup()
+      Micro.run(spark, o, rep)
     }
     setupS
   }
 
   /** Untimed warm-up: AvailableNow passes over a backfill corpus with this
     * workload's watermark delay and gap, each followed by table reads, until
-    * the JIT has compiled the pipeline's hot paths. */
-  private def warm(spark: SparkSession, o: Opts): Unit = {
+    * the JIT has compiled the pipeline's hot paths. Returns the corpus
+    * directory and its expected rows. */
+  private def warm(spark: SparkSession, o: Opts): (Path, Long) = {
     val dir = o.work.resolve("warm")
     val expected = Backfill.stage(spark, o.docBase + 10 * o.docs, 5000L, 2 * o.cpus, dir)
     for (k <- 1 to o.warm) {
@@ -182,6 +194,7 @@ object Trickle {
       require(Streams.rows(spark, table).count() == expected, "warm-up pass lost rows")
       Harness.rmTree(root)
     }
+    (dir, expected)
   }
 
   /** Waits until a micro-batch ran with the watermark at `wm` or later: the
@@ -195,23 +208,6 @@ object Trickle {
       Thread.sleep(20)
     }
     rep.check("stream drained within 60 s of the last release", reached, "watermark never passed the flush")
-  }
-
-  private def listFiles(d: Path): Seq[Path] =
-    scala.util.Using.resource(Files.list(d))(_.iterator().asScala.toSeq.sortBy(_.toString))
-
-  /** Most files any one micro-batch read, from the file source's own log. */
-  private def maxFilesPerBatch(log: Path): Int = {
-    val batchOf = "\"batchId\":(\\d+)".r
-    val pathOf = "\"path\":\"([^\"]+)\"".r
-    val seen = mutable.HashMap.empty[Long, mutable.Set[String]]
-    listFiles(log).filterNot(_.getFileName.toString.startsWith(".")).foreach { f =>
-      Files.readAllLines(f).asScala.foreach { line =>
-        for (b <- batchOf.findFirstMatchIn(line); p <- pathOf.findFirstMatchIn(line))
-          seen.getOrElseUpdate(b.group(1).toLong, mutable.Set.empty) += p.group(1)
-      }
-    }
-    seen.values.map(_.size).maxOption.getOrElse(0)
   }
 
   /** Moves each slot's files into the source directory at its due time. */
