@@ -4,6 +4,9 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Failed queries' messages, written next to oracle_sql.json. */
+  private val FailuresFile = "verify_failures.json"
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -81,17 +84,24 @@ object Verify {
         .ivfProbeRows(e.filter(org.apache.spark.sql.functions.col("vec_id") < 10), cents, 4)
         .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/ivf_probes")
     }
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    // a failing query is recorded and skipped, not fatal: the other
+    // queries still land for the compare
+    val failures = SparkEntry.queries.flatMap { case (name, fn) =>
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e.getMessage))
+        }
       // dedup queries cache shingle sets; details levels localCheckpoint
       // (RDD-level blocks clearCache does not reach)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
+      failure
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -105,11 +115,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    def obj(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     val absOut = Paths.get(outDir).toAbsolutePath.toString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("{GRAFT_OUT}", absOut))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.map { case (k, v) => k -> v.replace("{GRAFT_OUT}", absOut) }))
+    // each failing query's name → message, beside oracle_sql.json
+    Files.writeString(Paths.get(s"$outDir/$FailuresFile"), obj(failures))
+    val n = SparkEntry.queries.size
+    System.err.println(
+      if (failures.isEmpty) s"[verify] all $n queries written"
+      else s"[verify] ${failures.size} of $n queries failed " +
+        s"(${failures.map(_._1).mkString(", ")}); messages in $outDir/$FailuresFile")
     spark.stop()
   }
 }

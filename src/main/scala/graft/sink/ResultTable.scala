@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -120,11 +120,12 @@ final class ResultTable(val root: String) {
             _ <- commitKey(key)
           } yield CommitEntry(seq, key, fn)
         // a pre-seq-format commit (`<queryId>-<batchId>.json`, no seq
-        // prefix) means this table was written before the seq chain
-        // existed: silently skipping it would make committed data
-        // INVISIBLE (ADVICE r4) — fail hard with the migration path
-        // instead
-        if (e.isEmpty && i < 0 && commitKey(n).isDefined)
+        // prefix, manifest content) means this table was written before
+        // the seq chain existed: silently skipping it would make
+        // committed data INVISIBLE (ADVICE r4) — fail hard with the
+        // migration path instead. A stray file that merely has such a
+        // name (`notes-1.json`) is foreign, skipped like any other.
+        if (e.isEmpty && i < 0 && commitKey(n).isDefined && isManifest(fn))
           throw new IllegalStateException(
             s"legacy pre-seq commit '$fn' in $commitDir — this table predates " +
             "the seq-prefixed commit log; rename each '<key>.json' to " +
@@ -169,6 +170,14 @@ final class ResultTable(val root: String) {
       case None => entries
     }
     visible.flatMap(e => manifestFiles(e.fileName))
+  }
+
+  /** Whether a `_commits/` file has a manifest's header. */
+  private def isManifest(fileName: String): Boolean = {
+    val lines = new String(Files.readAllBytes(commitDir.resolve(fileName)),
+      StandardCharsets.UTF_8).linesIterator
+    lines.hasNext && lines.next().startsWith("queryId:") &&
+      lines.hasNext && lines.next().startsWith("batchId:")
   }
 
   /** Data files recorded in one commit's manifest (by file name). */
@@ -279,7 +288,7 @@ final class ResultTable(val root: String) {
     val target = dataDir.resolve(
       s"$key-${java.util.UUID.randomUUID().toString.take(8)}")
     df
-      .withColumn("_batch_id", lit(batchId))
+      .withColumn("_batch_id", ResultTable.batchIdColumn(batchId))
       .withColumn("_part_id", spark_partition_id())
       .write.parquet(target.toString)
     val files = listDir(target)
@@ -323,4 +332,16 @@ final class ResultTable(val root: String) {
     if (won) publishEntry(CommitEntry(seq, key, commitFileName(seq, key)))
     else publish(key)
   }
+}
+
+object ResultTable {
+
+  /** `batchId` as a column whose value stays out of generated code: a
+    * literal (`lit`, `typedLit`) is inlined into the sink projection,
+    * so every micro-batch compiled a new class. A zero-argument UDF is
+    * called through a reference instead; non-deterministic so the
+    * optimizer does not fold it back into a literal, non-nullable so
+    * `_batch_id` keeps the schema a literal gives it. */
+  private[sink] def batchIdColumn(batchId: Long): Column =
+    udf(() => batchId).asNondeterministic().asNonNullable()()
 }

@@ -80,13 +80,12 @@ object DeadLetter {
       trigger: Trigger = Trigger.AvailableNow()): (StreamingQuery, StreamingQuery) = {
     val main = StreamJob.run(clean(fragments), spec, table, checkpointDir,
       queryId, watermarkDelay, sessionGapMs, trigger)
-    val dlq = poisoned(fragments).writeStream
+    val dlq = StreamJob.start(fragments.sparkSession, poisoned(fragments).writeStream
       .queryName(s"$queryId-quarantine")
       .outputMode("append")
       .option("checkpointLocation", quarantineCheckpointDir)
       .trigger(trigger)
-      .foreachBatch(quarantine.appendBatch(s"$queryId-quarantine") _)
-      .start()
+      .foreachBatch(quarantine.appendBatch(s"$queryId-quarantine") _))
     (main, dlq)
   }
 }

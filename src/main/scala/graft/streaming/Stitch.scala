@@ -17,46 +17,88 @@ final case class AssembledDoc(
     event_time: Timestamp,
     n_frags: Int)
 
-/** Stitcher state: fragments keyed by page_idx, stored as flat
-  * primitive arrays (page ids + per-page lengths + concatenated
-  * tokens). A `Map[Int, Array[Int]]` here encodes through Catalyst's
-  * generic map path (boxed keys, per-entry object churn) and
-  * dominated ingest-batch state-commit cost; primitive arrays encode
-  * as contiguous UnsafeRow bytes. Must stay case-class-encodable
-  * (state store: RocksDB in production, HDFS-backed in tests). */
+/** Stitcher state: fragments keyed by page_idx, stored as two packed
+  * little-endian int buffers — `pages` holds (page_idx, length) pairs
+  * in insertion order, `tokenBytes` the concatenated tokens. A
+  * `Map[Int, Array[Int]]` here encodes through Catalyst's generic map
+  * path (boxed keys, per-entry object churn) and dominated ingest-batch
+  * state-commit cost. Plain `Array[Int]` fields are no better on the
+  * read side: their deserializer is a `MapObjects` loop that boxes
+  * every token, and its lambda variable gets a fresh id each time the
+  * operator is planned, so every micro-batch compiled a new state
+  * deserializer class. `BinaryType` fields read as one byte copy and
+  * generate the same code in every batch. Must stay
+  * case-class-encodable (state store: RocksDB in production,
+  * HDFS-backed in tests). */
 final case class StitchState(
-    pageIds: Array[Int],
-    pageLens: Array[Int],
-    tokens: Array[Int],
+    pages: Array[Byte],
+    tokenBytes: Array[Byte],
     source: String,
     maxEventMs: Long) {
+  import StitchState.{getInts, intAt, putInts}
 
-  def hasPage(pageIdx: Int): Boolean = pageIds.contains(pageIdx)
+  private def nPages: Int = pages.length / 8
+
+  /** Page ids in insertion order. */
+  def pageIds: Array[Int] = Array.tabulate(nPages)(i => intAt(pages, 2 * i))
+
+  /** Concatenated tokens in insertion order. */
+  def tokens: Array[Int] = {
+    val n = tokenBytes.length / 4
+    getInts(tokenBytes, 0, new Array[Int](n), 0, n)
+  }
+
+  def hasPage(pageIdx: Int): Boolean = {
+    var i = 0
+    while (i < nPages && intAt(pages, 2 * i) != pageIdx) i += 1
+    i < nPages
+  }
 
   def addPage(pageIdx: Int, toks: Array[Int], src: String, eventMs: Long): StitchState =
     if (hasPage(pageIdx)) this // dup page = dropped row: state untouched,
                                // exactly what the strict dedup stage does
     else StitchState(
-      pageIds :+ pageIdx, pageLens :+ toks.length, tokens ++ toks,
+      putInts(pages, Array(pageIdx, toks.length)), putInts(tokenBytes, toks),
       src, math.max(maxEventMs, eventMs))
 
   /** Token stream in ascending page order (insertion order may differ). */
   def assembled: Array[Int] = {
-    val order = pageIds.indices.sortBy(pageIds(_))
-    val out = new Array[Int](tokens.length)
+    val lens = Array.tabulate(nPages)(i => intAt(pages, 2 * i + 1))
+    val starts = lens.scanLeft(0)(_ + _)
+    val out = new Array[Int](tokenBytes.length / 4)
     var pos = 0
-    val starts = pageLens.scanLeft(0)(_ + _)
-    order.foreach { i =>
-      System.arraycopy(tokens, starts(i), out, pos, pageLens(i))
-      pos += pageLens(i)
+    pageIds.zipWithIndex.sortBy(_._1).foreach { case (_, i) =>
+      getInts(tokenBytes, starts(i), out, pos, lens(i))
+      pos += lens(i)
     }
     out
   }
 }
 
 object StitchState {
-  val empty: StitchState =
-    StitchState(Array.empty, Array.empty, Array.empty, "", Long.MinValue)
+  val empty: StitchState = StitchState(Array.empty, Array.empty, "", Long.MinValue)
+
+  private def le(b: Array[Byte], offInts: Int, nInts: Int): java.nio.IntBuffer =
+    java.nio.ByteBuffer.wrap(b, offInts * 4, nInts * 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).asIntBuffer()
+
+  private def intAt(b: Array[Byte], i: Int): Int = {
+    val o = 4 * i
+    (b(o) & 0xff) | (b(o + 1) & 0xff) << 8 | (b(o + 2) & 0xff) << 16 | b(o + 3) << 24
+  }
+
+  /** `n` ints of `b` from int offset `from` into `out` at `at`. */
+  private def getInts(b: Array[Byte], from: Int, out: Array[Int], at: Int, n: Int): Array[Int] = {
+    le(b, from, n).get(out, at, n)
+    out
+  }
+
+  /** `b` with `ints` appended. */
+  private def putInts(b: Array[Byte], ints: Array[Int]): Array[Byte] = {
+    val out = java.util.Arrays.copyOf(b, b.length + ints.length * 4)
+    le(out, b.length / 4, ints.length).put(ints)
+    out
+  }
 }
 
 /**
@@ -75,11 +117,14 @@ object StitchState {
  *
  * Exact duplicate fragments collapse naturally (same page_idx, same
  * bytes — the reference's CRC32-keyed idempotent writes,
- * scrape.go:448-457). Late fragments beyond the watermark are dropped
- * *before* this operator by the upstream `dropDuplicates` watermark
- * (counted in StreamingQueryProgress.stateOperators
- * numRowsDroppedByWatermark — the reference records them on the task
- * error list, structure.go:182).
+ * scrape.go:448-457); the first arrival in `(event_time, frag_idx)`
+ * order wins, as in [[StreamJob.batchOracle]]. Late fragments beyond
+ * the watermark are dropped and counted in
+ * StreamingQueryProgress.stateOperators numRowsDroppedByWatermark (the
+ * reference records them on the task error list, structure.go:182): in
+ * the default fused mode by `flatMapGroupsWithState` itself, which
+ * filters input rows older than the watermark before [[update]] sees
+ * them; in strict mode by the upstream `dropDuplicatesWithinWatermark`.
  *
  * Scale: state is per-in-flight-document, O(pages) each; the shuffle
  * into this operator partitions by doc_id (hash — uniformly spread, so
@@ -90,10 +135,12 @@ object StitchState {
 object Stitch {
 
   /** Per-group update: merge new fragments, or emit+evict on timeout.
-    * With `fused`, late rows (event_time < watermark) are dropped HERE
-    * — same predicate the upstream dropDuplicatesWithinWatermark
+    * With `fused`, late rows (event_time < watermark) are filtered HERE
+    * too — same predicate the upstream dropDuplicatesWithinWatermark
     * applies — so a session evicted by timeout can never be re-created
-    * by a straggler, without a second stateful operator. */
+    * by a straggler, without a second stateful operator. (With an
+    * event-time timeout the operator already drops and counts them
+    * before calling this; the filter keeps that guarantee local.) */
   def update(gapMs: Long, fused: Boolean)(
       docId: String,
       rows: Iterator[Fragment],
@@ -108,7 +155,10 @@ object Stitch {
         new Timestamp(s.maxEventMs), nPages))
     } else {
       val wm = state.getCurrentWatermarkMs()
-      val live = if (fused) rows.filter(_.event_time.getTime >= wm) else rows
+      // first arrival wins: fold in (event_time, frag_idx) order, so the
+      // earlier copy of a page duplicated within one batch is kept
+      val live = (if (fused) rows.filter(_.event_time.getTime >= wm) else rows)
+        .toArray.sortBy(f => (f.event_time.getTime, f.frag_idx))
       var s = state.getOption.orNull
       live.foreach { f =>
         val prev = if (s == null) StitchState.empty else s
@@ -129,20 +179,19 @@ object Stitch {
    * (reference: no bound — unbounded memory; ours is the north_rule
    * fix); `gap` is the session gap closing a document.
    *
-   * The `dropDuplicates` stage is the crawl-frontier dedup of
-   * north_star: watermark-scoped state keyed by (doc_id, page_idx),
-   * drops exact re-emissions AND late rows (counted by the state
-   * operator's numRowsDroppedByWatermark metric).
+   * In strict mode the `dropDuplicatesWithinWatermark` stage is the
+   * crawl-frontier dedup of north_star: watermark-scoped state keyed
+   * by (doc_id, page_idx), drops exact re-emissions AND late rows
+   * (counted by the state operator's numRowsDroppedByWatermark metric).
    */
   /** `fused = true` (default): late-drop + page-level dedup happen
     * inside the stitcher — ONE shuffle and ONE state store. The
     * separate `dropDuplicatesWithinWatermark` stage (`fused = false`)
     * keeps a state entry PER FRAGMENT and a second shuffle just to
-    * pre-drop exact re-emissions; its one observable advantage is the
-    * per-operator numRowsDroppedByWatermark metric, so strict mode
-    * stays available where that audit trail is required. At 10^12
-    * sequences the fused form halves both the ingest shuffle volume
-    * and the state-commit bytes of the hot path. */
+    * pre-drop exact re-emissions; both modes report late drops in
+    * numRowsDroppedByWatermark (fused: the stitcher's own operator).
+    * At 10^12 sequences the fused form halves both the ingest shuffle
+    * volume and the state-commit bytes of the hot path. */
   def stitch(
       fragments: Dataset[Fragment],
       watermarkDelay: String = "10 minutes",

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.extract.ExtractCompiler
 import graft.gen.Fragment
@@ -52,13 +52,39 @@ object StreamJob {
       fused: Boolean = true): StreamingQuery = {
     val assembled = Stitch.stitch(limitPages(fragments, spec), watermarkDelay, sessionGapMs, fused)
     val extracted = extractStage(assembled, spec)
-    extracted.writeStream
+    start(extracted.sparkSession, extracted.writeStream
       .queryName(queryId)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch(table.appendBatch(queryId) _)
-      .start()
+      .foreachBatch(table.appendBatch(queryId) _))
+  }
+
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** Start an engine stream so that its tasks share the default
+    * executor class loader — every engine query starts here.
+    *
+    * `start()` runs the query on a clone of `spark`'s session. With
+    * artifact isolation on (the Spark 4.1 default), each clone's tasks
+    * get their own executor class loader, and the code generator's
+    * class cache is keyed by (class loader, code): every query then
+    * Janino-compiles again the byte-identical classes all earlier
+    * queries already compiled, on its task threads, and the JIT warms
+    * them up from scratch. Engine streams add no session artifacts
+    * (jars, class files) of their own, so one shared loader loses
+    * nothing, and a stream compiles its generated code once per JVM.
+    * The clone copies the conf at `start()`, so the caller's own value
+    * is restored right after; starts are serialized so that two of
+    * them cannot restore each other's temporary value. */
+  def start(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery = synchronized {
+    val prev = spark.conf.getOption(ArtifactIsolation)
+    spark.conf.set(ArtifactIsolation, false)
+    try writer.start()
+    finally prev match {
+      case Some(v) => spark.conf.set(ArtifactIsolation, v)
+      case None => spark.conf.unset(ArtifactIsolation)
+    }
   }
 
   /** MaxPages limit (reference scrape/scrape.go:402-403: stop

@@ -63,6 +63,28 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("stitch: first arrival wins when the later copy of a duplicated page comes first in a batch") {
+    val mem = MemoryStream[Fragment]
+    val out = Stitch.stitch(mem.toDS(), watermarkDelay = "5 seconds", gapMs = 10000L)
+    val q = out.writeStream.format("memory").queryName("first_arr").outputMode("append").start()
+    try {
+      // the re-delivered copy of page 0 (event time +30 s, same frag_idx,
+      // as TokenGen plants duplicates) precedes the original in the batch
+      val orig = frag("d1", 0, d1p0, 10)
+      val dup = orig.copy(event_time = ts(40), is_dup = true)
+      mem.addData(dup, frag("d1", 1, d1p1, 12), orig)
+      q.processAllAvailable()
+      mem.addData(frag("~flush", 0, Array(2), 1000))
+      q.processAllAvailable()
+      mem.addData(frag("~flush2", 0, Array(2), 2000))
+      q.processAllAvailable()
+      val r = spark.table("first_arr").filter(col("doc_id") === "d1").as[AssembledDoc].collect()
+      assert(r.length == 1 && r(0).tokens.toSeq == (d1p0 ++ d1p1).toSeq && r(0).n_frags == 2)
+      // event_time = newest KEPT page (page 1 at 12 s), not the dup's 40 s
+      assert(r(0).event_time == ts(12), s"event_time ${r(0).event_time}")
+    } finally q.stop()
+  }
+
   test("late fragment beyond watermark is dropped in fused mode (no session re-creation)") {
     val mem = MemoryStream[Fragment]
     val out = Stitch.stitch(mem.toDS(), watermarkDelay = "5 seconds", gapMs = 5000L)
@@ -216,6 +238,23 @@ class StreamingSpec extends SparkSuite {
     assert(r.filter($"_batch_id" === 1L).count() == 1)
   }
 
+  test("exactly-once sink: a later batch id compiles no new generated class") {
+    // the batch id stamp must not be inlined into the sink projection
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val table = new ResultTable(Files.createTempDirectory("graft-sinkgen").toString)
+    // a scan that goes through whole-stage codegen (a local Seq would
+    // be folded into a local relation, with no generated code)
+    val df = spark.range(0, 2, 1, 2).toDF("k")
+    table.appendBatch("q")(df, 0L)
+    val before = METRIC_COMPILATION_TIME.getCount
+    table.appendBatch("q")(df, 1L)
+    table.appendBatch("q")(df, 2L)
+    val compiled = METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"batches 1 and 2 compiled $compiled classes")
+    assert(table.read(spark).select("_batch_id").as[Long].collect().sorted.toSeq ==
+      Seq(0L, 0L, 1L, 1L, 2L, 2L))
+  }
+
   test("sink time travel: readAsOf sees a history prefix; batch 10 orders after batch 2") {
     val dir = Files.createTempDirectory("graft-tt").toString
     val table = new ResultTable(dir)
@@ -305,6 +344,18 @@ class StreamingSpec extends SparkSuite {
       "queryId:old\nbatchId:7\n")
     val e = intercept[IllegalStateException] { table.snapshots() }
     assert(e.getMessage.contains("legacy"), e.getMessage)
+  }
+
+  test("stray <word>-<digits>.json without a manifest header is skipped, not a legacy commit") {
+    val dir = Files.createTempDirectory("graft-stray").toString
+    val table = new ResultTable(dir)
+    table.appendBatch("q")(Seq(("a", 1)).toDF("k", "v"), 0L)
+    // named like a pre-seq commit, but not a manifest: foreign, skipped
+    Files.writeString(java.nio.file.Paths.get(s"$dir/_commits/notes-1.json"), "{\"note\": 1}")
+    assert(table.snapshots() == Seq("q-0"))
+    assert(table.read(spark).count() == 1)
+    table.appendBatch("q")(Seq(("b", 2)).toDF("k", "v"), 1L)
+    assert(table.snapshots() == Seq("q-0", "q-1"))
   }
 
   test("snapshot-aware streaming read: orphaned uncommitted batch invisible; foreign commit name skipped") {
@@ -577,6 +628,37 @@ class StreamingSpec extends SparkSuite {
         s"RocksDB run: got ${got.count()} rows, expected $expected")
       all.unpersist()
     } finally spark.conf.unset(key)
+  }
+
+  test("a second run of the same stream compiles no new generated class") {
+    // a per-query executor class loader (artifact isolation), a batch
+    // id inlined into the sink projection or a state deserializer whose
+    // code changes per plan would each make this run compile again; the
+    // compile histogram counts each code-generator cache miss in the JVM
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val base = Files.createTempDirectory("graft-codegen")
+    val inDir = base.resolve("in").toString
+    val all = TokenGen.fragments(spark, 12).filter(!_.is_late)
+    all.repartition(3).write.parquet(s"$inDir/p1")
+    Seq(frag("~flushA", 0, Array(2), 100000)).toDS().coalesce(1).write.parquet(s"$inDir/p2")
+    Seq(frag("~flushB", 0, Array(2), 200000)).toDS().coalesce(1).write.parquet(s"$inDir/p3")
+    def runOnce(i: Int): (Long, Long) = {
+      val table = new ResultTable(base.resolve(s"table$i").toString)
+      val before = METRIC_COMPILATION_TIME.getCount
+      val q = StreamJob.run(
+        StreamJob.fileSource(spark, s"$inDir/*", maxFilesPerTrigger = 1),
+        spec, table, base.resolve(s"ck$i").toString, s"codegen$i",
+        watermarkDelay = "10 minutes", sessionGapMs = 60000L,
+        trigger = Trigger.AvailableNow())
+      q.awaitTermination(120000)
+      val compiled = METRIC_COMPILATION_TIME.getCount - before
+      assert(q.recentProgress.length >= 5, s"${q.recentProgress.length} batches")
+      (compiled, table.read(spark).count())
+    }
+    val (_, rows1) = runOnce(1)
+    val (compiled2, rows2) = runOnce(2)
+    assert(rows2 == rows1 && rows1 > 0, s"rows: $rows1 then $rows2")
+    assert(compiled2 == 0, s"second run compiled $compiled2 classes")
   }
 
   test("narrow expectedRows equals the full batch-oracle row count") {
