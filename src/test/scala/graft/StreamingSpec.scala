@@ -101,6 +101,9 @@ class StreamingSpec extends SparkSuite {
       val docs = spark.table("late_f").select("doc_id").as[String].collect().toSet
       assert(docs.contains("a"))
       assert(!docs.contains("zlate"), "late fragment must be dropped in fused mode")
+      val dropped = q.recentProgress.flatMap(_.stateOperators)
+        .map(_.numRowsDroppedByWatermark).sum
+      assert(dropped >= 1, s"late drop must be counted in metrics, got $dropped")
     } finally q.stop()
   }
 
