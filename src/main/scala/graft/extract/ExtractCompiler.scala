@@ -50,12 +50,6 @@ object ExtractCompiler {
     * array of field arrays (tag at head, delimiter stripped). */
   def fieldsOf(block: Column): Column = graft2.splitFields(block, FIELD_DELIM)
 
-  /** Payloads (tag stripped) of the fields matching a selector tag —
-    * fused codegen kernel; the match count is its size, so no separate
-    * matched-fields column is needed. */
-  def matchedPayloads(block: Column, tag: Int): Column =
-    graft2.payloadsForTag(fieldsOf(block), tag)
-
   /** Filter chain packed 3 bits per op, LSB-first = reference
     * left-to-right chaining (extract/filters.go:7-21); consumed by the
     * decodeAll kernel so the Text part needs no per-payload lambda. */

@@ -461,8 +461,8 @@ object TokenEngine {
     * batch image of the session jar (reference fetch/service.go:36-106
     * hydrate→fetch→persist; storage TTL diskv.go:49-81): each event
     * emitted with a digest of the jar AS HYDRATED before its own
-    * Set-Cookie merge, computed by the SAME fold both streaming state
-    * bindings run (SessionJar.foldEvents: event-time order, last-wins
+    * Set-Cookie merge, computed by the SAME fold the streaming
+    * operator runs (SessionJar.foldEvents: event-time order, last-wins
     * per cookie name, first-insertion jar order, TTL lapse between
     * events). The oracle re-derives the fold independently: TTL
     * segments via LAG + running sum, per-event jar via a correlated

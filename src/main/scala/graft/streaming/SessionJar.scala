@@ -62,9 +62,9 @@ object SessionJar {
     }
   }
 
-  /** The semantics, shared by both state-API bindings AND the batch
-    * image (graft.queries.TokenEngine.sessionJarFold — the DuckDB-
-    * checked driver row): fold one batch's events (sorted into
+  /** The semantics, shared by the streaming operator ([[hydrate]])
+    * AND the batch image (graft.queries.TokenEngine.sessionJarFold —
+    * the DuckDB-checked driver row): fold one batch's events (sorted into
     * event-time order so out-of-order arrival within a micro-batch
     * cannot leak a later cookie into an earlier event's jar) over the
     * jar state; TTL can also lapse BETWEEN events inside one batch

@@ -28,8 +28,9 @@ final case class AssembledDoc(
   * operator is planned, so every micro-batch compiled a new state
   * deserializer class. `BinaryType` fields read as one byte copy and
   * generate the same code in every batch. Must stay
-  * case-class-encodable (state store: RocksDB in production,
-  * HDFS-backed in tests). */
+  * case-class-encodable: `StreamJob` sets no state-store provider, so
+  * it ships on Spark's default HDFS-backed store; StreamingSpec's
+  * kill-and-resume test also runs it on RocksDB. */
 final case class StitchState(
     pages: Array[Byte],
     tokenBytes: Array[Byte],
@@ -55,8 +56,7 @@ final case class StitchState(
   }
 
   def addPage(pageIdx: Int, toks: Array[Int], src: String, eventMs: Long): StitchState =
-    if (hasPage(pageIdx)) this // dup page = dropped row: state untouched,
-                               // exactly what the strict dedup stage does
+    if (hasPage(pageIdx)) this // dup page: the first arrival stays
     else StitchState(
       putInts(pages, Array(pageIdx, toks.length)), putInts(tokenBytes, toks),
       src, math.max(maxEventMs, eventMs))
@@ -121,10 +121,9 @@ object StitchState {
  * order wins, as in [[StreamJob.batchOracle]]. Late fragments beyond
  * the watermark are dropped and counted in
  * StreamingQueryProgress.stateOperators numRowsDroppedByWatermark (the
- * reference records them on the task error list, structure.go:182): in
- * the default fused mode by `flatMapGroupsWithState` itself, which
- * filters input rows older than the watermark before [[update]] sees
- * them; in strict mode by the upstream `dropDuplicatesWithinWatermark`.
+ * reference records them on the task error list, structure.go:182) by
+ * `flatMapGroupsWithState` itself, which filters input rows older than
+ * the watermark before [[update]] sees them.
  *
  * Scale: state is per-in-flight-document, O(pages) each; the shuffle
  * into this operator partitions by doc_id (hash — uniformly spread, so
@@ -135,13 +134,12 @@ object StitchState {
 object Stitch {
 
   /** Per-group update: merge new fragments, or emit+evict on timeout.
-    * With `fused`, late rows (event_time < watermark) are filtered HERE
-    * too — same predicate the upstream dropDuplicatesWithinWatermark
-    * applies — so a session evicted by timeout can never be re-created
-    * by a straggler, without a second stateful operator. (With an
-    * event-time timeout the operator already drops and counts them
-    * before calling this; the filter keeps that guarantee local.) */
-  def update(gapMs: Long, fused: Boolean)(
+    * Late rows (event_time < watermark) are filtered HERE too, so a
+    * session evicted by timeout can never be re-created by a
+    * straggler. (With an event-time timeout the operator already drops
+    * and counts them before calling this; the filter keeps that
+    * guarantee local.) */
+  def update(gapMs: Long)(
       docId: String,
       rows: Iterator[Fragment],
       state: GroupState[StitchState]): Iterator[AssembledDoc] = {
@@ -157,7 +155,7 @@ object Stitch {
       val wm = state.getCurrentWatermarkMs()
       // first arrival wins: fold in (event_time, frag_idx) order, so the
       // earlier copy of a page duplicated within one batch is kept
-      val live = (if (fused) rows.filter(_.event_time.getTime >= wm) else rows)
+      val live = rows.filter(_.event_time.getTime >= wm)
         .toArray.sortBy(f => (f.event_time.getTime, f.frag_idx))
       var s = state.getOption.orNull
       live.foreach { f =>
@@ -174,39 +172,25 @@ object Stitch {
     }
   }
 
-  /**
-   * dedup → stitch. `watermarkDelay` bounds late-fragment acceptance
-   * (reference: no bound — unbounded memory; ours is the north_rule
-   * fix); `gap` is the session gap closing a document.
-   *
-   * In strict mode the `dropDuplicatesWithinWatermark` stage is the
-   * crawl-frontier dedup of north_star: watermark-scoped state keyed
-   * by (doc_id, page_idx), drops exact re-emissions AND late rows
-   * (counted by the state operator's numRowsDroppedByWatermark metric).
-   */
-  /** `fused = true` (default): late-drop + page-level dedup happen
-    * inside the stitcher — ONE shuffle and ONE state store. The
-    * separate `dropDuplicatesWithinWatermark` stage (`fused = false`)
-    * keeps a state entry PER FRAGMENT and a second shuffle just to
-    * pre-drop exact re-emissions; both modes report late drops in
-    * numRowsDroppedByWatermark (fused: the stitcher's own operator).
-    * At 10^12 sequences the fused form halves both the ingest shuffle
-    * volume and the state-commit bytes of the hot path. */
+  /** Frontier dedup and session assembly in ONE stateful operator
+    * behind ONE shuffle on doc_id: late-drop and page-level dedup
+    * (first arrival wins, [[StitchState.addPage]]) happen inside the
+    * stitcher. `watermarkDelay` bounds late-fragment acceptance
+    * (reference: no bound — unbounded memory; ours is the north_rule
+    * fix); `gapMs` is the session gap closing a document. `fused` is
+    * kept for source compatibility and must be `true`. */
   def stitch(
       fragments: Dataset[Fragment],
       watermarkDelay: String = "10 minutes",
       gapMs: Long = 30000L,
       fused: Boolean = true): Dataset[AssembledDoc] = {
+    require(fused, "fused = false is not supported: dedup and late-drop run only inside the stitcher")
     implicit val fragEnc = Encoders.product[Fragment]
     implicit val docEnc = Encoders.product[AssembledDoc]
     implicit val stateEnc = Encoders.product[StitchState]
-    val marked = fragments.withWatermark("event_time", watermarkDelay)
-    val deduped =
-      if (fused) marked
-      else marked.dropDuplicatesWithinWatermark("doc_id", "page_idx")
-    deduped
+    fragments.withWatermark("event_time", watermarkDelay)
       .groupByKey(_.doc_id)(Encoders.STRING)
       .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update(gapMs, fused))
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update(gapMs))
   }
 }

@@ -14,8 +14,9 @@ import graft.sink.ResultTable
  *
  * {{{
  *   source (fragment stream)
- *     → watermark + dropDuplicates(doc_id, page_idx)   [frontier dedup]
- *     → flatMapGroupsWithState stitch by doc_id        [session assembly]
+ *     → limitPages + watermark                         [narrow]
+ *     → flatMapGroupsWithState stitch by doc_id        [frontier dedup +
+ *                                                       session assembly]
  *     → ExtractCompiler (segment → part columns)       [narrow, codegen]
  *     → foreachBatch → ResultTable                     [exactly-once sink]
  * }}}
@@ -23,7 +24,7 @@ import graft.sink.ResultTable
  * This is the streaming recast of the reference's Task.Parse lifecycle
  * (reference scrape/scrape.go:86-182): fetch workers → dedup/robots
  * gates → block division → extraction → KV store → ordered encode.
- * Thread/process boundaries become the two shuffles (dedup/stitch on
+ * Thread/process boundaries become one shuffle (into the stitcher, on
  * doc_id; none in extraction) and the driver-coordinated epoch commit.
  *
  * Resumability: `checkpointLocation` + the ResultTable commit log give
@@ -48,9 +49,8 @@ object StreamJob {
       queryId: String,
       watermarkDelay: String = "10 minutes",
       sessionGapMs: Long = 30000L,
-      trigger: Trigger = Trigger.AvailableNow(),
-      fused: Boolean = true): StreamingQuery = {
-    val assembled = Stitch.stitch(limitPages(fragments, spec), watermarkDelay, sessionGapMs, fused)
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val assembled = Stitch.stitch(limitPages(fragments, spec), watermarkDelay, sessionGapMs)
     val extracted = extractStage(assembled, spec)
     start(extracted.sparkSession, extracted.writeStream
       .queryName(queryId)
@@ -124,8 +124,8 @@ object StreamJob {
         limited.filter(col("event_time") >= lit(new java.sql.Timestamp(maxEvent.getTime - delayMs)))
       case None => limited
     }
-    // first-arrival wins, deterministically: the fused stitcher keeps
-    // the earliest event_time per (doc_id, page_idx); a bare
+    // first-arrival wins, deterministically: the stitcher keeps the
+    // earliest (event_time, frag_idx) per (doc_id, page_idx); a bare
     // dropDuplicates keeps an arbitrary row, and event_time flows into
     // the output — latent flakiness if partitioning changes which
     // duplicate survives

@@ -59,13 +59,7 @@ object WindowAggs {
       .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
         col(key), col("n_docs"), col("total_tokens"))
 
-  /** Streaming forms: same plans with a watermark, append output. */
+  /** Streaming form: the tumbling plan with a watermark, append output. */
   def tumblingStream(docs: DataFrame, every: String, delay: String): DataFrame =
     tumbling(docs.withWatermark("event_time", delay), every)
-
-  def slidingStream(docs: DataFrame, length: String, slide: String, delay: String): DataFrame =
-    sliding(docs.withWatermark("event_time", delay), length, slide)
-
-  def sessionStream(docs: DataFrame, gap: String, delay: String): DataFrame =
-    session(docs.withWatermark("event_time", delay), gap)
 }

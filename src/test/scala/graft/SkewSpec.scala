@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.queries.Skew
-import graft.sink.Bucketing
 
 /** Skew + co-location operators: result equality vs the unsalted /
   * unbucketed plans, and the physical-plan properties that make them
@@ -97,35 +96,5 @@ class SkewSpec extends SparkSuite {
       .orderBy(col("source")).collect().toSeq
     val salted = graft.queries.TokenEngine.saltedJoinAgg(spark, dir).collect().toSeq
     assert(salted === plain)
-  }
-
-  test("bucketed tables: recurring equi-join runs with zero shuffle") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
-    val a = spark.range(1000).select(col("id").as("doc_id"),
-      (col("id") * 2).as("n_tok"))
-    val b = spark.range(1000).select(col("id").as("doc_id"),
-      concat(lit("s"), col("id") % 7).as("source"))
-    Bucketing.writeBucketed(a, "bkt_a", s"$wh/a", "doc_id", buckets = 8)
-    Bucketing.writeBucketed(b, "bkt_b", s"$wh/b", "doc_id", buckets = 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = Bucketing.readBucketed(spark, "bkt_a")
-        .join(Bucketing.readBucketed(spark, "bkt_b"), Seq("doc_id"))
-      val p = j.queryExecution.executedPlan.toString
-      assert(!p.contains("Exchange"),
-        s"bucketed join must not shuffle:\n$p")
-      assert(j.count() === 1000L)
-      // same layout serves a groupBy on the bucket key shuffle-free
-      val g = Bucketing.readBucketed(spark, "bkt_a").groupBy("doc_id")
-        .agg(sum("n_tok").as("t"))
-      val gp = g.queryExecution.executedPlan.toString
-      assert(!gp.contains("Exchange"),
-        s"groupBy on the bucket key must not shuffle:\n$gp")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS bkt_a")
-      spark.sql("DROP TABLE IF EXISTS bkt_b")
-    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -107,27 +107,26 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("late fragment beyond watermark is dropped and counted (strict mode)") {
+  test("StreamJob.run plans one stateful operator behind one shuffle, and no dedup stage") {
+    // the shipped design: frontier dedup, late-drop and session assembly
+    // all live in the stitcher's flatMapGroupsWithState; extraction and
+    // the sink add no exchange
+    val base = Files.createTempDirectory("graft-plan")
     val mem = MemoryStream[Fragment]
-    val out = Stitch.stitch(mem.toDS(), watermarkDelay = "5 seconds", gapMs = 5000L,
-      fused = false)
-    val q = out.writeStream.format("memory").queryName("late_t").outputMode("append").start()
+    val q = StreamJob.run(mem.toDS(), spec, new ResultTable(base.resolve("t").toString),
+      base.resolve("ck").toString, "plan_shape", watermarkDelay = "5 seconds",
+      sessionGapMs = 5000L, trigger = Trigger.ProcessingTime(0L))
     try {
-      mem.addData(frag("a", 0, d2, 100))
-      q.processAllAvailable() // watermark -> 95s
-      mem.addData(frag("zlate", 0, d1p0, 10)) // 90s behind: beyond watermark
+      mem.addData(frag("d1", 1, d1p1, 10), frag("d1", 0, d1p0, 11), frag("d1", 0, d1p0, 12))
       q.processAllAvailable()
-      mem.addData(frag("~flush", 0, Array(2), 1000))
-      q.processAllAvailable()
-      mem.addData(frag("~flush2", 0, Array(2), 2000))
-      q.processAllAvailable()
-      val docs = spark.table("late_t").select("doc_id").as[String].collect().toSet
-      assert(docs.contains("a"))
-      assert(!docs.contains("zlate"), "late fragment must be dropped")
-      val dropped = q.recentProgress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      assert(dropped >= 1, s"late drop must be counted in metrics, got $dropped")
+      val nodes = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+        .executedPlan.collect { case n => n.getClass.getSimpleName }
+      val shape = nodes.mkString(", ")
+      assert(nodes.count(_ == "FlatMapGroupsWithStateExec") == 1, shape)
+      assert(!nodes.exists(_.startsWith("StreamingDeduplicate")), shape)
+      assert(nodes.count(_ == "ShuffleExchangeExec") == 1, shape)
     } finally q.stop()
+    intercept[IllegalArgumentException](Stitch.stitch(mem.toDS(), fused = false))
   }
 
   test("politeness pacing: deterministic per-source schedule with min spacing") {
@@ -202,29 +201,6 @@ class StreamingSpec extends SparkSuite {
       assert(rows.exists(r => r.getAs[String]("source") == "s2" &&
         r.getAs[Long]("n_docs") == 1))
     } finally q.stop()
-  }
-
-  test("metrics listener captures per-batch volumes, state totals and late drops") {
-    val metrics = Metrics.install(spark)
-    try {
-      val mem = MemoryStream[Fragment]
-      val out = Stitch.stitch(mem.toDS(), watermarkDelay = "5 seconds", gapMs = 5000L)
-      val q = out.writeStream.format("memory").queryName("metrics_t")
-        .outputMode("append").start()
-      try {
-        mem.addData(frag("m1", 0, d2, 100))
-        q.processAllAvailable()
-        mem.addData(frag("m2", 0, d1p0, 200))
-        q.processAllAvailable()
-        val rows = metrics.rows.filter(_.query_name == "metrics_t")
-        assert(rows.nonEmpty, "no metrics captured")
-        assert(rows.map(_.input_rows).sum >= 2)
-        assert(rows.exists(_.state_rows_total >= 1), "state totals missing")
-        assert(rows.forall(_.batch_duration_ms >= 0))
-        val df = metrics.snapshot(spark).filter(col("query_name") === "metrics_t")
-        assert(df.count() == rows.length)
-      } finally q.stop()
-    } finally spark.streams.removeListener(metrics)
   }
 
   test("exactly-once sink: replayed batch id is a no-op; lineage columns present") {
@@ -445,44 +421,6 @@ class StreamingSpec extends SparkSuite {
       assert(rows("r3") == Seq("a=1", "b=2"), "jar persisted across batches")
       assert(rows("r4") == Seq(), s"TTL must empty the jar, got ${rows("r4")}")
     } finally q.stop()
-  }
-
-  test("session jar via transformWithState: identical output to the fMGWS binding; TTL timer evicts") {
-    // transformWithState requires the RocksDB state-store provider;
-    // set it for this query only and restore the session default after
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[CookieEvent]
-      val out = SessionJarTws.hydrate(mem.toDS(), ttlMs = 60000L, watermarkDelay = "5 seconds")
-      val q = out.writeStream.format("memory").queryName("jar_tws")
-        .outputMode("append").start()
-      try {
-        def ev(tok: String, doc: String, sec: Long, set: String*) =
-          CookieEvent(tok, doc, ts(sec), set.toArray)
-        // the same event script as the fMGWS test — the assertion set
-        // below IS the cross-binding equivalence check
-        mem.addData(ev("u1", "r2", 10, "b=2"), ev("u1", "r1", 5, "a=1"),
-          ev("u2", "s1", 5))
-        q.processAllAvailable()
-        mem.addData(ev("u1", "r3", 20, "a=9"))
-        q.processAllAvailable()
-        mem.addData(ev("u1", "r4", 200))
-        q.processAllAvailable()
-        val rows = spark.table("jar_tws").as[HydratedEvent].collect()
-          .map(e => e.doc_id -> e.jar.toSeq.sorted).toMap
-        assert(rows("r1") == Seq(), "first request hydrates an empty jar")
-        assert(rows("r2") == Seq("a=1"), "in-batch order is event-time order")
-        assert(rows("s1") == Seq(), "tokens are isolated")
-        assert(rows("r3") == Seq("a=1", "b=2"), "jar persisted across batches")
-        assert(rows("r4") == Seq(), s"TTL must empty the jar, got ${rows("r4")}")
-      } finally q.stop()
-    } finally prevProv match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None    => spark.conf.unset(provKey)
-    }
   }
 
   test("dead-letter: poisoned fragments neither crash the pipeline nor vanish") {
