@@ -2,7 +2,7 @@ package graft.extract
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{TokenExpressions => graft2}
+import org.apache.spark.sql.graft.Kernels
 import graft.model._
 
 /**
@@ -42,13 +42,13 @@ object ExtractCompiler {
    * fallback, reference structure.go:139-144).
    */
   def segment(df: DataFrame, tokensCol: String = "tokens"): DataFrame = {
-    val blocks = graft2.splitBlocks(col(tokensCol), RECORD_START)
+    val blocks = Kernels.splitBlocks(col(tokensCol), RECORD_START)
     df.select(col("*"), posexplode(blocks).as(Seq("block_idx", "block_tokens")))
   }
 
   /** Split one block into fields: `[tag payload* FIELD_DELIM]*` →
     * array of field arrays (tag at head, delimiter stripped). */
-  def fieldsOf(block: Column): Column = graft2.splitFields(block, FIELD_DELIM)
+  def fieldsOf(block: Column): Column = Kernels.splitFields(block, FIELD_DELIM)
 
   /** Filter chain packed 3 bits per op, LSB-first = reference
     * left-to-right chaining (extract/filters.go:7-21); consumed by the
@@ -64,20 +64,6 @@ object ExtractCompiler {
       }
       acc | (code << (3 * i))
     }
-  }
-
-  /** Base-36 decode of a payload to a space-joined string (the "text"
-    * of the field) — matches TokenCodec.decodeToken. One-pass codegen
-    * kernel (was transform+conv+array_join). */
-  def decodeText(payload: Column): Column = graft2.decodeJoin(payload)
-
-  /** 0-based start offsets of contiguous subsequence `pattern` in
-    * `payload` — the regex find-all analog (reference
-    * extract/extractors.go:215-231). Pattern is a compile-time literal,
-    * so the match predicate unrolls into plain conjunctions. */
-  def patternPositions(payload: Column, pattern: Seq[Int]): Column = {
-    require(pattern.nonEmpty, "empty token pattern")
-    graft2.tokenFindAll(payload, pattern)
   }
 
   /** One compiled part = Field×Type (reference Part, structure.go:113-126).
@@ -97,7 +83,7 @@ object ExtractCompiler {
     val colName = s"${f.name}_${tpe.name}"
     tpe match {
       case ExtractorType.Text =>
-        Some(nilGuard(graft2.decodeAll(payloads, opsOf(f.filters))).as(colName))
+        Some(nilGuard(Kernels.decodeAll(payloads, opsOf(f.filters))).as(colName))
       case ExtractorType.Tokens =>
         Some(nilGuard(payloads).as(colName))
       case ExtractorType.Count =>
@@ -107,12 +93,12 @@ object ExtractCompiler {
       case ExtractorType.Const(v) =>
         Some(lit(v).as(colName))
       case ExtractorType.TokenPattern(p) =>
-        Some(nilGuard(graft2.findAllFlat(payloads, p)).as(colName))
+        Some(nilGuard(Kernels.findAllFlat(payloads, p)).as(colName))
       case ExtractorType.Path =>
         // join-key projection: decoded payloads become child doc_ids;
         // emitted under a reserved name, dropped from user output
         // (reference scrape.go:569-571)
-        Some(nilGuard(graft2.decodeAll(payloads, 0)).as(s"__path_${f.name}"))
+        Some(nilGuard(Kernels.decodeAll(payloads, 0)).as(s"__path_${f.name}"))
       case ExtractorType.Unknown(n) =>
         // skipped with a log, scrape continues (scrape.go:317-319)
         System.err.println(s"[graft] unknown extractor type '$n' for field '${f.name}' — skipped")
@@ -152,7 +138,7 @@ object ExtractCompiler {
     val withFields = blocks.withColumn("__fields", fieldsOf(col("block_tokens")))
     val tags = compiled.map(_.selector).distinct
     val withTags = tags.foldLeft(withFields) { (df, tag) =>
-      df.withColumn(s"__p_$tag", graft2.payloadsForTag(col("__fields"), tag))
+      df.withColumn(s"__p_$tag", Kernels.payloadsForTag(col("__fields"), tag))
     }
 
     val parts: Seq[Column] = for {
@@ -161,7 +147,7 @@ object ExtractCompiler {
       c <- partColumn(col(s"__p_${f.selector}"), f, t)
     } yield c
     if (parts.isEmpty) throw new SpecException("no parts found")
-    val carry = docs.columns.filter(_ != "tokens").map(col) :+ col("block_idx")
+    val carry = docs.columns.toSeq.filter(_ != "tokens").map(col) :+ col("block_idx")
     withTags.select(carry ++ parts: _*)
   }
 

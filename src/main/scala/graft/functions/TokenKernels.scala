@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * One-pass token-array kernels backing the extraction-path custom
- * expressions (org.apache.spark.sql.graft.TokenExpressions). The
+ * One-pass token-array kernels backing the extraction-path Catalyst
+ * nodes (org.apache.spark.sql.graft.Kernel). The
  * equivalent Catalyst higher-order-function chains (filter(sequence)
  * → transform → slice …) are interpreted and box every element —
  * at 32 concurrent extraction pipelines the allocation rate saturates

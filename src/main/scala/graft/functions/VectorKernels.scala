@@ -1,14 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Static kernels shared by interpreted eval and generated code. The
- * custom expressions (org.apache.spark.sql.graft.GraftExpressions)
- * emit a single static call from `doGenCode`, so they stay inside
- * whole-stage codegen (no CodegenFallback, no interpreted HOF chain)
+ * Catalyst nodes (org.apache.spark.sql.graft.Kernel) call them through
+ * `StaticInvoke`, a single static call in generated code, so they stay
+ * inside whole-stage codegen (no CodegenFallback, no interpreted HOF chain)
  * — the "custom Catalyst `Expression` beats a Scala UDF" path of
  * SURVEY §7.3 for the two genuinely hot scalar kernels of the
  * training-data pipeline (similarity search and simhash dedup).
@@ -276,24 +275,4 @@ object VectorKernels {
     while (i < 64) { if (counters(i) > 0) out |= (1L << i); i += 1 }
     out
   }
-}
-
-/** Column-API entry points (implemented in the sql package bridge). */
-object VectorExprs {
-  def cosineSim(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.GraftExpressions.cosineSim(a, b)
-  def simhash64(words: Column): Column =
-    org.apache.spark.sql.graft.GraftExpressions.simhash64(words)
-  def hyperplaneBucket(v: Column, planes: Array[Array[Double]]): Column =
-    org.apache.spark.sql.graft.GraftExpressions.hyperplaneBucket(v, planes)
-  def minhashSig(sh: Column, a: Array[Long], b: Array[Long], p: Long): Column =
-    org.apache.spark.sql.graft.GraftExpressions.minhashSig(sh, a, b, p)
-  def shingleSet(words: Column, n: Int): Column =
-    org.apache.spark.sql.graft.GraftExpressions.shingleSet(words, n)
-  def ivfProbes(v: Column, cents: Array[Array[Double]], nProbe: Int): Column =
-    org.apache.spark.sql.graft.GraftExpressions.ivfProbes(v, cents, nProbe)
-  def gramHashes(words: Column, n: Int): Column =
-    org.apache.spark.sql.graft.GraftExpressions.gramHashes(words, n)
-  def winnowSelect(hashes: Column, window: Int): Column =
-    org.apache.spark.sql.graft.GraftExpressions.winnowSelect(hashes, window)
 }

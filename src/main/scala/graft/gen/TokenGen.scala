@@ -3,6 +3,9 @@ package graft.gen
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.TokenCodec
 
 /** One fragment of a tokenized document as it arrives on the stream.
@@ -177,11 +180,16 @@ object TokenGen {
 
   /** Shared kernel of the deterministic key→page functions: page
     * tokens for `key` under namespace `ns` — called both from the
-    * Scala helpers and (statically) from the SynthPage codegen
-    * expression, so the generated-code path is definitionally equal
-    * to the Scala one. */
+    * Scala helpers and (through [[synthPage]]) from generated code,
+    * so the generated-code path is definitionally equal to the Scala
+    * one. */
   def synthTokens(ns: String, key: String): Array[Int] =
     docTokens(new Rng(SEED ^ fnv1a(ns + key)))
+
+  /** [[synthTokens]] over Spark's internal types: the kernel behind
+    * `Kernels.synthPage`. */
+  def synthPage(key: UTF8String, ns: String): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(synthTokens(ns, key.toString))
 
   /** Child-doc table for a set of link keys: canonical input_hint
     * schema with source="details". */
@@ -200,14 +208,14 @@ object TokenGen {
     synthDocs(keys, "page/", "page")
 
   /** key set → input_hint table under namespace `ns`: distinct keys,
-    * then the SynthPage codegen expression per row — no typed map, no
+    * then the synthPage kernel per row — no typed map, no
     * Encoder round-trip; the whole resolve stays in whole-stage
     * codegen after the distinct's exchange. */
   private def synthDocs(keys: Dataset[String], ns: String, source: String): DataFrame = {
     import org.apache.spark.sql.functions._
     keys.toDF("doc_id").distinct()
       .withColumn("tokens",
-        org.apache.spark.sql.graft.TokenExpressions.synthPage(col("doc_id"), ns))
+        org.apache.spark.sql.graft.Kernels.synthPage(col("doc_id"), ns))
       .withColumn("n_tok", size(col("tokens")))
       .withColumn("source", lit(source))
   }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExprs
+import org.apache.spark.sql.graft.Kernels
 
 /**
  * Deduplication operators for a training-data pipeline over the
@@ -47,7 +47,7 @@ object Dedup {
     * codegen kernel (the array_distinct(transform(sequence...)) chain
     * is interpreted and was a large share of every dedup query). */
   def shingles(textCol: Column, n: Int = 3): Column =
-    graft.functions.VectorExprs.shingleSet(words(textCol), n)
+    Kernels.shingleSet(words(textCol), n)
 
   /** doc_id + distinct shingle set (shared by jaccard + minhash). */
   def shingleSets(docs: DataFrame, n: Int = 3): DataFrame =
@@ -139,7 +139,7 @@ object Dedup {
    */
   def minhashSignature(sh: Column, k: Int = 32, seed: Long = 42L): Column = {
     val params = minhashParams(k, seed)
-    graft.functions.VectorExprs.minhashSig(
+    Kernels.minhashSig(
       sh, params.map(_._1).toArray, params.map(_._2).toArray, MinhashP)
   }
 
@@ -196,10 +196,10 @@ object Dedup {
     * independently). */
   def simhashSigs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      VectorExprs.simhash64(words(col("text"))).as("sig"))
+      Kernels.simhash64(words(col("text"))).as("sig"))
 
   /** SimHash near-dup pairs: 64-bit signature per doc (codegen'd
-    * custom expression), banded into 4×16-bit keys (pigeonhole
+    * kernel), banded into 4×16-bit keys (pigeonhole
     * guarantee for hamming ≤ 3), verified with bit_count(xor) ≤
     * maxHamming. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
@@ -252,7 +252,7 @@ object Dedup {
     // deduped after ordering
     a.join(b, Seq("task"))
       .filter(col("id_a") =!= col("id_b"))
-      .filter(VectorExprs.cosineSim(col("va"), col("vb")) >= threshold)
+      .filter(Kernels.cosineSim(col("va"), col("vb")) >= threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
@@ -279,7 +279,7 @@ object Dedup {
     cand
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("vb")), Seq("id_b"))
-      .filter(VectorExprs.cosineSim(col("va"), col("vb")) >= threshold)
+      .filter(Kernels.cosineSim(col("va"), col("vb")) >= threshold)
       .select(col("id_a"), col("id_b"))
       .orderBy(col("id_a"), col("id_b"))
   }

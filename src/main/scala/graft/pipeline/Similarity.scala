@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExprs
+import org.apache.spark.sql.graft.Kernels
 import graft.gen.TokenGen
 
 /**
@@ -45,7 +45,7 @@ object Similarity {
     val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv"))
     val scored = c.join(broadcast(q),
         if (excludeSelf) col("q_id") =!= col("n_id") else lit(true))
-      .withColumn("cos", VectorExprs.cosineSim(col("qv"), col("nv")))
+      .withColumn("cos", Kernels.cosineSim(col("qv"), col("nv")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -55,7 +55,7 @@ object Similarity {
 
   /** (vec_id, table, bucket) rows: bucket = sign bits of the vector
     * against each hyperplane of the table, via the fused
-    * HyperplaneBucket codegen expression — ONE pass over the vector
+    * hyperplaneBucket codegen kernel — ONE pass over the vector
     * per table (sign(dot) == sign(cosine), so norms never compute).
     * Round-1 evaluated nPlanes separate cosine kernels per table,
     * each redoing both norms — the dominant ann_lsh cost. */
@@ -68,7 +68,7 @@ object Similarity {
     val planes = hyperplanes(nTables, nPlanes, dim, seed)
     val tables = (0 until nTables).map { t =>
       struct(lit(t).as("tbl"),
-        VectorExprs.hyperplaneBucket(col("embedding"), planes(t).toArray).as("bucket"))
+        Kernels.hyperplaneBucket(col("embedding"), planes(t).toArray).as("bucket"))
     }
     emb.select(col("vec_id"), explode(array(tables: _*)).as("b"))
       .select(col("vec_id"), col("b.tbl"), col("b.bucket"))
@@ -81,7 +81,7 @@ object Similarity {
    * hence the centroids are identical at any corpus scale). The
    * sample is tiny (≤ sampleN × dim doubles) and Lloyd runs on the
    * driver in microseconds; the expensive part — assigning the corpus
-   * to cells — is the fused IvfProbes codegen expression, one narrow
+   * to cells — is the fused ivfProbes codegen kernel, one narrow
    * pass per row.
    */
   def ivfCentroids(
@@ -125,13 +125,13 @@ object Similarity {
   /** (vec_id, cell) corpus assignment under the IVF quantizer. */
   def ivfCells(emb: DataFrame, cents: Array[Array[Double]]): DataFrame =
     emb.select(col("vec_id"),
-      element_at(graft.functions.VectorExprs.ivfProbes(col("embedding"), cents, 1), 1)
+      element_at(Kernels.ivfProbes(col("embedding"), cents, 1), 1)
         .as("cell"))
 
   /** (q_id, cell) probe list per query: the nProbe nearest cells. */
   def ivfProbeRows(queries: DataFrame, cents: Array[Array[Double]], nProbe: Int): DataFrame =
     queries.select(col("vec_id").as("q_id"),
-      explode(graft.functions.VectorExprs.ivfProbes(col("embedding"), cents, nProbe))
+      explode(Kernels.ivfProbes(col("embedding"), cents, nProbe))
         .as("cell"))
 
   /**
@@ -156,7 +156,7 @@ object Similarity {
     val scored = cand
       .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("qv")), Seq("q_id"))
       .join(corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv")), Seq("n_id"))
-      .withColumn("cos", VectorExprs.cosineSim(col("qv"), col("nv")))
+      .withColumn("cos", Kernels.cosineSim(col("qv"), col("nv")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -183,7 +183,7 @@ object Similarity {
     val scored = cand
       .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("qv")), Seq("q_id"))
       .join(corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv")), Seq("n_id"))
-      .withColumn("cos", VectorExprs.cosineSim(col("qv"), col("nv")))
+      .withColumn("cos", Kernels.cosineSim(col("qv"), col("nv")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

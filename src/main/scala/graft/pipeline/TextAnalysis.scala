@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Kernels
 
 /**
  * Text-analysis operators over the `documents` table: token counting,
@@ -85,7 +86,7 @@ object TextAnalysis {
     * sort, digest) independently from the same hash stream — the
     * same export scheme as the simhash signatures. */
   def gramHashes(textCol: Column): Column =
-    graft.functions.VectorExprs.gramHashes(words(lower(trim(textCol))), 3)
+    Kernels.gramHashes(words(lower(trim(textCol))), 3)
 
   /** (doc_id, hashes) export table for the winnow oracle. */
   def winnowGrams(docs: DataFrame): DataFrame =
@@ -99,7 +100,7 @@ object TextAnalysis {
     docs.select(
       col("doc_id"),
       md5(lower(trim(col("text")))).as("md5_fp"),
-      graft.functions.VectorExprs.winnowSelect(gramHashes(col("text")), window)
+      Kernels.winnowSelect(gramHashes(col("text")), window)
         .as("winnow_fp"))
       .orderBy(col("doc_id"))
 

@@ -124,7 +124,7 @@ object TokenEngine {
     extracted.select(
       col("doc_id"), col("source"), col("block_idx"),
       array_join(col("Names_text"), "|").as("Names_text"),
-      org.apache.spark.sql.graft.TokenExpressions.intJoinAll(col("Names_tokens"))
+      org.apache.spark.sql.graft.Kernels.intJoinAll(col("Names_tokens"))
         .as("Names_tokens"),
       col("Names_count"), col("Names_const"),
       array_join(col("Images_text"), "|").as("Images_text"),

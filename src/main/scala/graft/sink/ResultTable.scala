@@ -58,6 +58,7 @@ import org.apache.spark.sql.functions._
  * and ATOMIC_MOVE becomes the catalog swap — exactly Iceberg's model.
  */
 final class ResultTable(val root: String) {
+  import ResultTable.CommitEntry
 
   private val dataDir = Paths.get(root, "data")
   private val commitDir = Paths.get(root, "_commits")
@@ -85,9 +86,6 @@ final class ResultTable(val root: String) {
     * the round-3 scope note this closes.) */
   private def commitFileName(seq: Long, key: String): String =
     f"$seq%020d.$key.json"
-
-  /** One committed manifest: (seq, commit key, file name). */
-  private final case class CommitEntry(seq: Long, key: String, fileName: String)
 
   /** Sanity shape of a commit key: `<queryId>-<numeric batchId>`. */
   private def commitKey(name: String): Option[(String, Long)] = {
@@ -136,16 +134,6 @@ final class ResultTable(val root: String) {
       }
     parsed.groupBy(_.key).values.map(_.minBy(_.seq)).toSeq.sortBy(_.seq)
   }
-
-  /** O(#commits) — one commit-log listing, the same per-commit catalog
-    * read Iceberg pays. Note: the seq-prefixed name format is not
-    * readable by (and does not read) the pre-seq `<key>.json` format;
-    * tables are not carried across that change — a legacy commit name
-    * makes every read fail hard with the migration hint (see
-    * [[commitEntries]]; silently skipping it would hide committed
-    * data). */
-  def isCommitted(queryId: String, batchId: Long): Boolean =
-    commitEntries().exists(_.key == s"$queryId-$batchId")
 
   /** Committed snapshots in COMMIT order (the seq chain) — the table's
     * history (Iceberg `table.snapshots()` analog). Each element is the
@@ -236,8 +224,9 @@ final class ResultTable(val root: String) {
   /** Idempotent commit-time publication: hardlink a committed batch's
     * data files into `pub/` for streaming readers. Crash windows are
     * repaired on replay: died before the commit file → no links exist
-    * and the rewrite republishes; died mid-publication → the
-    * `isCommitted` fast path re-runs publish from the manifest. */
+    * and the rewrite republishes; died mid-publication → the replayed
+    * [[appendBatch]] finds its key in the log and re-runs publish from
+    * the manifest before skipping the batch. */
   private def publish(key: String): Unit =
     commitEntries().find(_.key == key).foreach(publishEntry)
 
@@ -335,6 +324,9 @@ final class ResultTable(val root: String) {
 }
 
 object ResultTable {
+
+  /** One committed manifest: (seq, commit key, file name). */
+  private final case class CommitEntry(seq: Long, key: String, fileName: String)
 
   /** `batchId` as a column whose value stays out of generated code: a
     * literal (`lit`, `typedLit`) is inlined into the sink projection,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{TokenExpressions => graft2}
+import org.apache.spark.sql.graft.Kernels
 import graft.model.TokenCodec
 
 /**
@@ -90,10 +90,10 @@ object Paginate {
     * kernels, so the whole derivation stays in codegen. */
   def nextKeyBySelector(tokens: Column, tag: Int): Column = {
     val perBlock = transform(
-      graft2.splitBlocks(tokens, TokenCodec.RECORD_START),
-      b => graft2.payloadsForTag(graft2.splitFields(b, TokenCodec.FIELD_DELIM), tag))
+      Kernels.splitBlocks(tokens, TokenCodec.RECORD_START),
+      b => Kernels.payloadsForTag(Kernels.splitFields(b, TokenCodec.FIELD_DELIM), tag))
     val nonEmpty = filter(flatten(perBlock), p => size(p) > 0)
-    when(size(nonEmpty) > 0, graft2.decodeJoin(element_at(nonEmpty, 1)))
+    when(size(nonEmpty) > 0, Kernels.decodeJoin(element_at(nonEmpty, 1)))
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
  * block counter and error list, scrape/structure.go:182-186); these
  * are the monitoring surface the north_rule adds.
  *
- * All three shapes are plain Catalyst window aggregations — streaming
- * (append mode + watermark) and batch (the DuckDB-oracle-checked
- * `q_tumbling/q_sliding/q_session` queries in SparkEntry) share this
- * code path.
+ * A plain Catalyst window aggregation; the streaming form adds a
+ * watermark and runs in append mode. The DuckDB-oracle-checked batch
+ * rows `q_tumbling`/`q_sliding`/`q_session` do not run this code:
+ * they are `Relational.qTumbling`/`qSliding`/`qSessionWindow`.
  *
  * Scale: groupBy(window, source) shuffles on (window, source); the
  * Zipf-hot source is bounded per window by partial (map-side)
@@ -39,25 +39,6 @@ object WindowAggs {
         sum(col("n_tok")).as("total_tokens"))
       .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
         col("source"), col("n_docs"), col("total_tokens"))
-
-  /** Sliding windows (length > slide ⇒ each row lands in several). */
-  def sliding(docs: DataFrame, length: String = "30 seconds",
-              slide: String = "10 seconds", timeCol: String = "event_time"): DataFrame =
-    docs
-      .groupBy(window(col(timeCol), length, slide).as("w"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
-      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-        col("source"), col("n_docs"), col("total_tokens"))
-
-  /** Session windows with inactivity gap (window end = last event +
-    * gap) — the declarative sibling of Stitch's state-level sessions. */
-  def session(docs: DataFrame, gap: String = "30 seconds",
-              key: String = "source", timeCol: String = "event_time"): DataFrame =
-    docs
-      .groupBy(session_window(col(timeCol), gap).as("w"), col(key))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
-      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-        col(key), col("n_docs"), col("total_tokens"))
 
   /** Streaming form: the tumbling plan with a watermark, append output. */
   def tumblingStream(docs: DataFrame, every: String, delay: String): DataFrame =

@@ -5,23 +5,21 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.model.TokenCodec
-
 /**
- * SQL surface for the engine's native expressions — the
+ * SQL surface for the engine's native kernels — the
  * `SparkSessionExtensions` injector (SURVEY §2.10): with
  * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
- * (or [[GraftExtensions.register]] on a live session) every codegen
- * kernel is callable from `spark.sql(...)`/`expr(...)` by name, so a
+ * (or [[GraftExtensions.register]] on a live session) every [[Kernel]]
+ * with a SQL name is callable from `spark.sql(...)`/`expr(...)`, so a
  * user of the reference can write the whole extraction in SQL — the
  * declarative analog of the reference's selector strings — instead of
- * going through the Scala spec compiler. The builders construct the
- * same `Expression` nodes the Column API uses; nothing is interpreted
- * twice and the functions inline into whole-stage codegen exactly like
- * their Column forms.
+ * going through the Scala spec compiler. The functions are derived
+ * from the [[Kernel]] table and build the same node the Column API
+ * ([[Kernels]]) builds, so they inline into whole-stage codegen
+ * exactly like their Column forms.
  *
- * Naming: `token_*` = extraction kernels (TokenExpressions),
- * `graft_*` = vector/dedup kernels (GraftExpressions).
+ * Naming: `token_*` = extraction kernels (TokenKernels),
+ * `graft_*` = vector/dedup kernels (VectorKernels).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -48,92 +46,31 @@ object GraftExtensions {
       s"$fn: $what must be a literal int, got $e")
   }
 
-  private def arity(fn: String, args: Seq[Expression], n: Int*): Unit =
-    require(n.contains(args.length),
-      s"$fn expects ${n.mkString(" or ")} arguments, got ${args.length}")
+  /** SQL arguments → the kernel's node: its inputs, then each literal
+    * int or its default. */
+  private def build(k: Kernel)(args: Seq[Expression]): Expression = {
+    val n = k.inputs.length
+    val min = n + k.ints.count(_._2.isEmpty)
+    val max = n + k.ints.length
+    require(args.length >= min && args.length <= max,
+      s"${k.sql} expects ${if (min == max) s"$min" else s"$min or $max"} arguments, " +
+        s"got ${args.length}")
+    val ints = k.ints.zipWithIndex.map { case ((what, default), i) =>
+      Literal(args.lift(n + i).map(intArg(_, k.sql, what)).orElse(default).get)
+    }
+    k.node(args.take(n) ++ ints)
+  }
 
   type FunctionDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def fn(name: String, usage: String)(
-      builder: Seq[Expression] => Expression): FunctionDescription =
-    (FunctionIdentifier(name),
-      new ExpressionInfo("graft", null, name, usage, ""),
-      builder)
-
   /** Every registered function; shared by the extensions injector and
     * [[register]]. */
-  val functions: Seq[FunctionDescription] = Seq(
-    fn("token_blocks",
-      "token_blocks(tokens[, record_start]) - split a token array into blocks") { args =>
-      arity("token_blocks", args, 1, 2)
-      SplitBlocks(args.head, args.lift(1)
-        .map(intArg(_, "token_blocks", "record_start"))
-        .getOrElse(TokenCodec.RECORD_START))
-    },
-    fn("token_fields",
-      "token_fields(block[, delim]) - split a block into tagged fields") { args =>
-      arity("token_fields", args, 1, 2)
-      SplitFields(args.head, args.lift(1)
-        .map(intArg(_, "token_fields", "delim"))
-        .getOrElse(TokenCodec.FIELD_DELIM))
-    },
-    fn("token_payloads",
-      "token_payloads(fields, tag) - payloads of the fields headed by tag") { args =>
-      arity("token_payloads", args, 2)
-      PayloadsForTag(args.head, intArg(args(1), "token_payloads", "tag"))
-    },
-    fn("token_decode",
-      "token_decode(payload) - base-36 decode to a space-joined string") { args =>
-      arity("token_decode", args, 1)
-      DecodeJoin(args.head)
-    },
-    fn("token_decode_all",
-      "token_decode_all(payloads[, ops]) - decode each payload, packed filter chain ops") { args =>
-      arity("token_decode_all", args, 1, 2)
-      DecodeAll(args.head, args.lift(1)
-        .map(intArg(_, "token_decode_all", "ops")).getOrElse(0))
-    },
-    fn("token_find_all",
-      "token_find_all(payload, pattern) - 0-based start offsets of the subsequence") { args =>
-      arity("token_find_all", args, 2)
-      TokenFindAll(args.head, args(1))
-    },
-    fn("token_find_all_flat",
-      "token_find_all_flat(payloads, pattern) - find_all per payload, flattened") { args =>
-      arity("token_find_all_flat", args, 2)
-      FindAllFlat(args.head, args(1))
-    },
-    fn("token_int_join",
-      "token_int_join(payloads) - decimal tokens space-joined, payloads '|'-joined") { args =>
-      arity("token_int_join", args, 1)
-      IntJoinAll(args.head)
-    },
-    fn("graft_cosine",
-      "graft_cosine(a, b) - cosine similarity of two numeric arrays") { args =>
-      arity("graft_cosine", args, 2)
-      CosineSim(args.head, args(1))
-    },
-    fn("graft_simhash64",
-      "graft_simhash64(words) - 64-bit SimHash of a word array") { args =>
-      arity("graft_simhash64", args, 1)
-      SimHash64(args.head)
-    },
-    fn("graft_shingles",
-      "graft_shingles(words, n) - distinct n-word shingles") { args =>
-      arity("graft_shingles", args, 2)
-      ShingleSet(args.head, intArg(args(1), "graft_shingles", "n"))
-    },
-    fn("graft_gram_hashes",
-      "graft_gram_hashes(words, n) - xxhash64 per n-word gram, in order") { args =>
-      arity("graft_gram_hashes", args, 2)
-      GramHashes(args.head, intArg(args(1), "graft_gram_hashes", "n"))
-    },
-    fn("graft_winnow",
-      "graft_winnow(hashes, window) - winnowing fingerprint selection") { args =>
-      arity("graft_winnow", args, 2)
-      WinnowSelect(args.head, intArg(args(1), "graft_winnow", "window"))
-    })
+  val functions: Seq[FunctionDescription] = Kernel.all.filter(_.sql.nonEmpty).map { k =>
+    (FunctionIdentifier(k.sql),
+      new ExpressionInfo(classOf[Kernel].getName, null, k.sql, k.usage, "", "", "", "", "", "", ""),
+      build(k) _)
+  }
 
   /** Register into an already-built session (tests, notebooks, the
     * driver contract's sessions — which are constructed without

@@ -143,8 +143,8 @@ class PaginateSpec extends SparkSuite {
     val keys = Seq("a", "x?page=3", "2S 2T", "ünïcødé-key", "")
     val got = keys.toDF("k")
       .select(col("k"),
-        org.apache.spark.sql.graft.TokenExpressions.synthPage(col("k"), "page/").as("p"),
-        org.apache.spark.sql.graft.TokenExpressions.synthPage(col("k"), "child/").as("c"))
+        org.apache.spark.sql.graft.Kernels.synthPage(col("k"), "page/").as("p"),
+        org.apache.spark.sql.graft.Kernels.synthPage(col("k"), "child/").as("c"))
       .as[(String, Array[Int], Array[Int])].collect()
     got.foreach { case (k, p, c) =>
       assert(p.toSeq == graft.gen.TokenGen.pageTokens(k).toSeq, s"page mismatch for '$k'")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExprs
+import org.apache.spark.sql.graft.Kernels
 import graft.pipeline._
 
 /** Training-data pipeline operators: planted-duplicate corpora for
@@ -165,7 +165,7 @@ class PipelineSpec extends SparkSuite {
       ("a", Array("x", "y", "z")),
       ("b", Array("x", "y", "z")),
       ("c", Array("p", "q", "r", "s", "t"))
-    ).toDF("id", "ws").select($"id", VectorExprs.simhash64($"ws").as("sig"))
+    ).toDF("id", "ws").select($"id", Kernels.simhash64($"ws").as("sig"))
     val m = df.as[(String, Long)].collect().toMap
     assert(m("a") == m("b"), "same words -> same signature")
     assert(m("a") != m("c"))
@@ -190,7 +190,7 @@ class PipelineSpec extends SparkSuite {
       (Array(0f, 0f), Array(1f, 1f), 0.0),
       (Array(3f, 4f), Array(3f, 4f), 1.0)
     ).toDF("a", "b", "exp")
-    val got = df.select(VectorExprs.cosineSim($"a", $"b").as("c"), $"exp")
+    val got = df.select(Kernels.cosineSim($"a", $"b").as("c"), $"exp")
       .as[(Double, Double)].collect()
     // float32 inputs: 0.6f != 0.6 exactly — tolerance is float ulp scale
     got.foreach { case (c, e) => assert(math.abs(c - e) < 1e-6, s"$c vs $e") }

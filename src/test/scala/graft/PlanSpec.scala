@@ -69,14 +69,15 @@ class PlanSpec extends SparkSuite {
     val docs = Seq(("d", Array(2, 3, 100, 1), 4, "s")).toDF("doc_id", "tokens", "n_tok", "source")
     val p = physical(ExtractCompiler.compile(docs, TokenEngine.flagshipSpec))
     // `*(n)` marks operators inside a codegen stage: the segmentation
-    // generator (splitblocks) and field split (splitfields) must carry
-    // it. The outer per-tag projections use higher-order functions,
-    // which Spark never codegens — but those operate on the small
-    // per-block field arrays the kernels produced, not raw tokens.
-    assert("\\*\\(\\d+\\) Generate posexplode\\(splitblocks".r.findFirstIn(p).nonEmpty,
-      s"splitblocks not in codegen span:\n$p")
-    assert("\\*\\(\\d+\\) Project .*splitfields".r.findFirstIn(p).nonEmpty,
-      s"splitfields not in codegen span:\n$p")
+    // generator (splitBlocks) and the three per-block kernels the
+    // flagship extraction calls (splitFields, payloadsForTag,
+    // decodeAll) must each carry it, as a static call
+    def call(k: String) = s"static_invoke\\(graft\\.functions\\.TokenKernels\\.$k\\("
+    assert(s"\\*\\(\\d+\\) Generate posexplode\\(${call("splitBlocks")}".r.findFirstIn(p).nonEmpty,
+      s"splitBlocks not in codegen span:\n$p")
+    for (k <- Seq("splitFields", "payloadsForTag", "decodeAll"))
+      assert(s"\\*\\(\\d+\\) Project .*${call(k)}".r.findFirstIn(p).nonEmpty,
+        s"$k not in codegen span:\n$p")
     assert(!p.toLowerCase.contains("codegenfallback"), "kernel expressions must codegen")
   }
 

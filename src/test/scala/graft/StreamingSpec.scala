@@ -181,7 +181,7 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("tumbling/sliding/session window aggregates over a doc stream") {
+  test("tumbling window aggregate over a doc stream (watermark, append mode)") {
     val mem = MemoryStream[AssembledDoc]
     val agg = WindowAggs.tumblingStream(mem.toDF(), "10 seconds", "5 seconds")
     val q = agg.writeStream.format("memory").queryName("win_t").outputMode("append").start()
