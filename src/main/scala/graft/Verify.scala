@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.bench.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -103,25 +104,11 @@ object Verify {
         .foreach(_.unpersist(blocking = false))
       failure
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def obj(kv: Iterable[(String, String)]): String =
-      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     val absOut = Paths.get(outDir).toAbsolutePath.toString
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      obj(SparkEntry.oracleSql.map { case (k, v) => k -> v.replace("{GRAFT_OUT}", absOut) }))
+      Json(SparkEntry.oracleSql.map { case (k, v) => k -> v.replace("{GRAFT_OUT}", absOut) }))
     // each failing query's name → message, beside oracle_sql.json
-    Files.writeString(Paths.get(s"$outDir/$FailuresFile"), obj(failures))
+    Files.writeString(Paths.get(s"$outDir/$FailuresFile"), Json(failures))
     val n = SparkEntry.queries.size
     System.err.println(
       if (failures.isEmpty) s"[verify] all $n queries written"

@@ -87,6 +87,23 @@ object TokenKernels {
     new GenericArrayData(buf.toArray)
   }
 
+  /** Decoded text (decodeJoin) of the first non-empty payload of a
+    * `tag` field, blocks and fields in order; "" when there is none. */
+  def firstTagText(tokens: ArrayData, recordStart: Int, delim: Int, tag: Int): UTF8String = {
+    val blocks = splitBlocks(tokens, recordStart)
+    var b = 0
+    while (b < blocks.numElements()) {
+      val ps = payloadsForTag(splitFields(blocks.getArray(b), delim), tag)
+      var i = 0
+      while (i < ps.numElements()) {
+        if (ps.getArray(i).numElements() > 0) return decodeJoin(ps.getArray(i))
+        i += 1
+      }
+      b += 1
+    }
+    UTF8String.EMPTY_UTF8
+  }
+
   /** 0-based start offsets of contiguous subsequence `pattern` in
     * `payload` (regex find-all analog; overlapping matches counted). */
   def findAll(payload: ArrayData, pattern: ArrayData): ArrayData = {

@@ -14,49 +14,22 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object VectorKernels {
 
-  /** Cosine similarity of two float vectors, accumulated in double.
-    * 0.0 for zero-norm inputs (instead of NaN) so thresholds compose. */
-  def cosineF(a: ArrayData, b: ArrayData): Double = {
-    val x = a.toFloatArray()
-    val y = b.toFloatArray()
-    val n = math.min(x.length, y.length)
+  /** Element `i` of a float or double vector, widened to double. */
+  private def at(v: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) v.getFloat(i) else v.getDouble(i)
+
+  /** Cosine similarity of two float or double vectors, accumulated in
+    * double. 0.0 for zero-norm inputs (instead of NaN) so thresholds
+    * compose. */
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      dot += x(i).toDouble * y(i); na += x(i).toDouble * x(i); nb += y(i).toDouble * y(i)
+      val x = at(a, i, aFloat); val y = at(b, i, bFloat)
+      dot += x * y; na += x * x; nb += y * y
       i += 1
     }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  def cosineD(a: ArrayData, b: ArrayData): Double = {
-    val x = a.toDoubleArray()
-    val y = b.toDoubleArray()
-    val n = math.min(x.length, y.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) { dot += x(i) * y(i); na += x(i) * x(i); nb += y(i) * y(i); i += 1 }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  private def asDoubles(a: ArrayData, isFloat: Boolean): Array[Double] =
-    if (isFloat) {
-      val f = a.toFloatArray()
-      val d = new Array[Double](f.length)
-      var i = 0
-      while (i < f.length) { d(i) = f(i); i += 1 }
-      d
-    } else a.toDoubleArray()
-
-  /** Mixed element types (e.g. float corpus vs double literal
-    * hyperplane): widen both to double. */
-  def cosineM(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    val x = asDoubles(a, aFloat)
-    val y = asDoubles(b, bFloat)
-    val n = math.min(x.length, y.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) { dot += x(i) * y(i); na += x(i) * x(i); nb += y(i) * y(i); i += 1 }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
@@ -66,21 +39,14 @@ object VectorKernels {
     * cosineSim at 0 while skipping both norm computations — and all
     * planes of one table fold into a single pass over the vector. */
   def hyperBucket(v: ArrayData, planes: Array[Array[Double]], isFloat: Boolean): Long = {
-    val x = if (isFloat) {
-      val f = v.toFloatArray()
-      val d = new Array[Double](f.length)
-      var i = 0
-      while (i < f.length) { d(i) = f(i); i += 1 }
-      d
-    } else v.toDoubleArray()
     var bucket = 0L
     var p = 0
     while (p < planes.length) {
       val pl = planes(p)
-      val n = math.min(x.length, pl.length)
+      val n = math.min(v.numElements(), pl.length)
       var dot = 0.0
       var i = 0
-      while (i < n) { dot += x(i) * pl(i); i += 1 }
+      while (i < n) { dot += at(v, i, isFloat) * pl(i); i += 1 }
       if (dot >= 0.0) bucket |= (1L << p)
       p += 1
     }
@@ -92,53 +58,59 @@ object VectorKernels {
     * quantizer's probe list. nProbe=1 gives the assignment cell. */
   def probeCells(v: ArrayData, cents: Array[Array[Double]], nProbe: Int,
       isFloat: Boolean): ArrayData = {
-    val x = if (isFloat) {
-      val f = v.toFloatArray()
-      val d = new Array[Double](f.length)
-      var i = 0
-      while (i < f.length) { d(i) = f(i); i += 1 }
-      d
-    } else v.toDoubleArray()
+    val m = v.numElements()
     var nx = 0.0
     var xi = 0
-    while (xi < x.length) { nx += x(xi) * x(xi); xi += 1 }
+    while (xi < m) { val x = at(v, xi, isFloat); nx += x * x; xi += 1 }
     val k = cents.length
     val cos = new Array[Double](k)
     var c = 0
     while (c < k) {
       val ct = cents(c)
-      val n = math.min(x.length, ct.length)
+      val n = math.min(m, ct.length)
       var dot = 0.0; var nc = 0.0
       var i = 0
-      while (i < n) { dot += x(i) * ct(i); nc += ct(i) * ct(i); i += 1 }
+      while (i < n) { dot += at(v, i, isFloat) * ct(i); nc += ct(i) * ct(i); i += 1 }
       cos(c) = if (nx == 0.0 || nc == 0.0) 0.0 else dot / math.sqrt(nx * nc)
       c += 1
     }
-    val order = (0 until k).sortBy(i => (-cos(i), i)).take(math.min(nProbe, k))
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(order.toArray)
+    // selection in (-cos, index) order, not a sort of boxed tuples:
+    // ivfCentroids calls this per sample vector and Lloyd iteration
+    val order = new Array[Int](math.max(0, math.min(nProbe, k)))
+    val taken = new Array[Boolean](k)
+    var p = 0
+    while (p < order.length) {
+      var best = -1
+      c = 0
+      while (c < k) {
+        if (!taken(c) && (best < 0 || java.lang.Double.compare(-cos(c), -cos(best)) < 0)) best = c
+        c += 1
+      }
+      taken(best) = true
+      order(p) = best
+      p += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(order)
   }
 
   private val Space = UTF8String.fromString(" ")
+
+  /** Every n-word gram of `words`, space-joined, in order; none when
+    * there are fewer than n words. */
+  private def grams(words: ArrayData, n: Int): Array[UTF8String] =
+    Array.tabulate(math.max(words.numElements() - n + 1, 0)) { i =>
+      UTF8String.concatWs(Space, Array.tabulate(n)(j => words.getUTF8String(i + j)): _*)
+    }
 
   /** Distinct n-word shingles in first-occurrence order — one pass,
     * matching array_distinct(transform(sequence..., concat_ws)) and
     * the DuckDB oracle's list_distinct(list_transform(...)) exactly.
     * words shorter than n → empty set. */
   def shingleSet(words: ArrayData, n: Int): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val m = words.numElements()
-    if (m < n) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[UTF8String]()
-    var i = 0
-    while (i <= m - n) {
-      val parts = new Array[UTF8String](n)
-      var j = 0
-      while (j < n) { parts(j) = words.getUTF8String(i + j); j += 1 }
-      seen.add(UTF8String.concatWs(Space, parts: _*))
-      i += 1
-    }
-    new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size())))
+    grams(words, n).foreach(seen.add)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      seen.toArray(new Array[AnyRef](seen.size())))
   }
 
   /** MinHash signature in one pass: per shingle, h = pmod(xxhash64(s),
@@ -172,24 +144,10 @@ object VectorKernels {
     * `concat_ws(" ", ...)` gram string) of every n-word gram, in
     * order. One pass; replaces an interpreted transform(sequence) →
     * concat_ws → xxhash64 chain. */
-  def gramHashes(words: ArrayData, n: Int): ArrayData = {
-    val m = words.numElements()
-    if (m < n)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.empty[Long])
-    val out = new Array[Long](m - n + 1)
-    var i = 0
-    while (i <= m - n) {
-      val parts = new Array[UTF8String](n)
-      var j = 0
-      while (j < n) { parts(j) = words.getUTF8String(i + j); j += 1 }
-      val g = UTF8String.concatWs(Space, parts: _*)
-      out(i) = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(g.getBaseObject, g.getBaseOffset, g.numBytes, 42L)
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  def gramHashes(words: ArrayData, n: Int): ArrayData =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
+      grams(words, n).map(g => org.apache.spark.sql.catalyst.expressions.XXH64
+        .hashUnsafeBytes(g.getBaseObject, g.getBaseOffset, g.numBytes, 42L)))
 
   /** Winnowing selection: sorted distinct minima of every length-
     * `window` sliding window over the hash stream (whole stream if

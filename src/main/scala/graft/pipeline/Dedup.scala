@@ -173,12 +173,7 @@ object Dedup {
           hash(slice(col("sig"), bIdx * rowsPerBand + 1, rowsPerBand)).as("bkey"))): _*))
         .as("b"))
       .select(col("doc_id"), col("b.band"), col("b.bkey"))
-    val l = banded.toDF("d1", "band", "bkey")
-    val r = banded.toDF("d2", "band", "bkey")
-    val cand = l.join(r, Seq("band", "bkey")).filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"))
-      .dropDuplicates("d1", "d2")
-    cand
+    bucketPairs(banded, "d1", "d2")
       .join(sets.select(col("doc_id").as("d1"), col("sh").as("sh1")), Seq("d1"))
       .join(sets.select(col("doc_id").as("d2"), col("sh").as("sh2")), Seq("d2"))
       .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
@@ -203,20 +198,28 @@ object Dedup {
     * guarantee for hamming ≤ 3), verified with bit_count(xor) ≤
     * maxHamming. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sigs = simhashSigs(docs)
-    val banded = sigs.select(col("doc_id"), col("sig"),
+    // the signature rides in the id struct (doc_id first, so struct
+    // order is doc_id order): no join back after the pair dedup
+    val banded = simhashSigs(docs).select(struct(col("doc_id"), col("sig")).as("doc"),
       explode(array((0 until 4).map(i =>
         struct(lit(i).as("band"),
           shiftright(col("sig"), i * 16).bitwiseAND(lit(0xffffL)).as("bkey"))): _*)).as("b"))
-      .select(col("doc_id"), col("sig"), col("b.band"), col("b.bkey"))
-    val l = banded.toDF("d1", "sig1", "band", "bkey")
-    val r = banded.toDF("d2", "sig2", "band", "bkey")
-    l.join(r, Seq("band", "bkey")).filter(col("d1") < col("d2"))
-      .dropDuplicates("d1", "d2")
-      .withColumn("hamming", bit_count(col("sig1").bitwiseXOR(col("sig2"))))
+      .select(col("doc"), col("b.band"), col("b.bkey"))
+    bucketPairs(banded, "d1", "d2")
+      .withColumn("hamming", bit_count(col("d1.sig").bitwiseXOR(col("d2.sig"))))
       .filter(col("hamming") <= maxHamming)
-      .select(col("d1"), col("d2"), col("hamming"))
+      .select(col("d1.doc_id").as("d1"), col("d2.doc_id").as("d2"), col("hamming"))
       .orderBy(col("d1"), col("d2"))
+  }
+
+  /** Distinct (a, b) pairs, a < b, of the ids in the first column of
+    * `buckets` that share a bucket: equal values in all its other
+    * columns. The LSH candidate self-join of every banded operator. */
+  private def bucketPairs(buckets: DataFrame, a: String, b: String): DataFrame = {
+    val keys = buckets.columns.toSeq.tail
+    buckets.toDF(a +: keys: _*).join(buckets.toDF(b +: keys: _*), keys)
+      .filter(col(a) < col(b))
+      .select(col(a), col(b)).dropDuplicates(a, b)
   }
 
   /**
@@ -271,12 +274,7 @@ object Dedup {
       nPlanes: Int = 4,
       dim: Int = 64,
       seed: Long = 42L): DataFrame = {
-    val buckets = Similarity.lshCandidates(emb, nTables, nPlanes, dim, seed)
-    val l = buckets.toDF("id_a", "tbl", "bucket")
-    val r = buckets.toDF("id_b", "tbl", "bucket")
-    val cand = l.join(r, Seq("tbl", "bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).dropDuplicates("id_a", "id_b")
-    cand
+    bucketPairs(Similarity.lshCandidates(emb, nTables, nPlanes, dim, seed), "id_a", "id_b")
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("vb")), Seq("id_b"))
       .filter(Kernels.cosineSim(col("va"), col("vb")) >= threshold)

@@ -53,8 +53,9 @@ final case class MediaFeatures(
  */
 object Multimodal {
 
-  /** Encode an RGB pixel grid as a real PNG via javax.imageio. */
-  def encodePng(w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
+  /** Encode an RGB pixel grid as a real image via javax.imageio:
+    * `format` "png", or "jpg" (the per-frame codec of [[encodeAvi]]). */
+  def encodeImage(format: String, w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
     img.setRGB(0, 0, w, h, rgb, 0, w)
@@ -62,82 +63,61 @@ object Multimodal {
     // write() returns false (empty payload!) when no writer is
     // registered (e.g. a jlink'd runtime without the codec) — fail at
     // the encode site with the real reason
-    require(javax.imageio.ImageIO.write(img, "png", bos), "no PNG ImageWriter registered")
+    require(javax.imageio.ImageIO.write(img, format, bos), s"no $format ImageWriter registered")
     bos.toByteArray
   }
 
-  /** Encode PCM16 mono samples as a canonical 44-byte-header WAV. */
-  def encodeWav(sampleRate: Int, samples: Array[Short]): Array[Byte] = {
-    val dataLen = samples.length * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1) // PCM
-      .putShort(1) // mono
-      .putInt(sampleRate)
-      .putInt(sampleRate * 2) // byte rate
-      .putShort(2) // block align
-      .putShort(16) // bits/sample
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    samples.foreach(bb.putShort)
+  /** `vs` as little-endian words of `width` bytes (2 or 4). */
+  private def le(width: Int, vs: Int*): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(width * vs.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    vs.foreach(v => if (width == 2) bb.putShort(v.toShort) else bb.putInt(v))
     bb.array()
   }
 
-  /** Encode an RGB pixel grid as a real JPEG via javax.imageio (the
-    * JDK ships a JPEG writer) — the per-frame codec of [[encodeAvi]]. */
-  def encodeJpeg(w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, w, h, rgb, 0, w)
-    val bos = new java.io.ByteArrayOutputStream()
-    require(javax.imageio.ImageIO.write(img, "jpg", bos), "no JPEG ImageWriter registered")
-    bos.toByteArray
+  private def fourcc(s: String): Array[Byte] = s.getBytes("US-ASCII")
+
+  /** One RIFF chunk: fourcc `id`, little-endian body length, body, and
+    * a pad byte after an odd-length body (the RIFF rule). A RIFF file
+    * is the chunk `RIFF` whose body is its form type and its chunks. */
+  private def chunk(id: String, body: Array[Byte]*): Array[Byte] = {
+    val n = body.map(_.length).sum
+    val bb = java.nio.ByteBuffer.allocate(8 + n + (n & 1)).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put(fourcc(id)).putInt(n)
+    body.foreach(bb.put)
+    bb.array()
   }
+
+  /** Encode PCM16 mono samples as a canonical 44-byte-header WAV. */
+  def encodeWav(sampleRate: Int, samples: Array[Short]): Array[Byte] =
+    // fmt: PCM, mono, sample rate, byte rate, block align, bits/sample
+    chunk("RIFF", fourcc("WAVE"),
+      chunk("fmt ", le(2, 1, 1), le(4, sampleRate, sampleRate * 2), le(2, 2, 16)),
+      chunk("data", le(2, samples.toIndexedSeq.map(_.toInt): _*)))
 
   /** Encode JPEG frames as a canonical Motion-JPEG AVI: RIFF `AVI `
     * with an `hdrl` LIST (avih main header + one `vids`/`MJPG` stream
     * with its BITMAPINFOHEADER) and a `movi` LIST of `00dc` frame
     * chunks — the same RIFF chunk grammar as [[encodeWav]], one level
-    * deeper. Every multi-byte field is little-endian; odd-length
-    * chunks pad to even per the RIFF rule. */
+    * deeper. Every multi-byte field is little-endian. */
   def encodeAvi(w: Int, h: Int, fps: Int, frames: Seq[Array[Byte]]): Array[Byte] = {
     require(fps > 0 && frames.nonEmpty, "empty AVI")
-    def le32(v: Int): Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      b.putInt(v); b.array()
-    }
-    def le16(v: Int): Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(2).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      b.putShort(v.toShort); b.array()
-    }
-    def fourcc(s: String): Array[Byte] = s.getBytes("US-ASCII")
-    def dwords(vs: Int*): Array[Byte] = vs.toArray.flatMap(le32)
-    def chunk(id: String, body: Array[Byte]): Array[Byte] =
-      fourcc(id) ++ le32(body.length) ++ body ++
-        (if (body.length % 2 == 1) Array(0.toByte) else Array.empty[Byte])
-    def list(kind: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", fourcc(kind) ++ body)
     val maxFrame = frames.map(_.length).max
     // MainAVIHeader: usPerFrame, maxBytesPerSec, padding, flags,
     // totalFrames, initialFrames, streams, suggestedBufferSize,
     // width, height, reserved[4]
-    val avih = chunk("avih", dwords(1000000 / fps, maxFrame * fps, 0, 0,
+    val avih = chunk("avih", le(4, 1000000 / fps, maxFrame * fps, 0, 0,
       frames.length, 0, 1, maxFrame, w, h, 0, 0, 0, 0))
     // AVIStreamHeader: fccType, fccHandler, flags, priority+language,
     // initialFrames, scale, rate, start, length, suggestedBufferSize,
     // quality (-1 = default), sampleSize, rcFrame
-    val strh = chunk("strh", fourcc("vids") ++ fourcc("MJPG") ++
-      dwords(0, 0, 0, 1, fps, 0, frames.length, maxFrame, -1, 0) ++
-      le16(0) ++ le16(0) ++ le16(w) ++ le16(h))
+    val strh = chunk("strh", fourcc("vids"), fourcc("MJPG"),
+      le(4, 0, 0, 0, 1, fps, 0, frames.length, maxFrame, -1, 0), le(2, 0, 0, w, h))
     // BITMAPINFOHEADER with biCompression = 'MJPG'
-    val strf = chunk("strf", dwords(40, w, h) ++ le16(1) ++ le16(24) ++
-      fourcc("MJPG") ++ dwords(w * h * 3, 0, 0, 0, 0))
-    val hdrl = list("hdrl", avih ++ list("strl", strh ++ strf))
-    val movi = list("movi", frames.toArray.flatMap(f => chunk("00dc", f)))
-    val body = fourcc("AVI ") ++ hdrl ++ movi
-    fourcc("RIFF") ++ le32(body.length) ++ body
+    val strf = chunk("strf", le(4, 40, w, h), le(2, 1, 24),
+      fourcc("MJPG"), le(4, w * h * 3, 0, 0, 0, 0))
+    val hdrl = chunk("LIST", fourcc("hdrl"), avih, chunk("LIST", fourcc("strl"), strh, strf))
+    val movi = chunk("LIST", fourcc("movi") +: frames.map(chunk("00dc", _)): _*)
+    chunk("RIFF", fourcc("AVI "), hdrl, movi)
   }
 
   /** Deterministic synthetic media corpus (seeded): REAL PNG payloads
@@ -154,7 +134,7 @@ object Multimodal {
             val w = 8 + rng.nextInt(17) // 8..24 px
             val h = 8 + rng.nextInt(17)
             val rgb = Array.fill(w * h)(rng.nextInt(0x1000000))
-            MediaRecord(f"m-$i%08d", kind, encodePng(w, h, rgb),
+            MediaRecord(f"m-$i%08d", kind, encodeImage("png", w, h, rgb),
               MediaMeta(w, h, 0, 1))
           case "audio" =>
             val nSamp = 200 + rng.nextInt(600)
@@ -166,7 +146,7 @@ object Multimodal {
             val h = 8 + rng.nextInt(9)
             val nf = 2 + rng.nextInt(4) // 2..5 frames
             val frames = Seq.fill(nf)(
-              encodeJpeg(w, h, Array.fill(w * h)(rng.nextInt(0x1000000))))
+              encodeImage("jpg", w, h, Array.fill(w * h)(rng.nextInt(0x1000000))))
             MediaRecord(f"m-$i%08d", kind, encodeAvi(w, h, 10, frames),
               MediaMeta(w, h, 0, nf))
         }
@@ -205,84 +185,61 @@ object Multimodal {
       }
     }
 
-    /** Decoded grayscale intensities in [0,1], row-major. */
-    def decodePixels(payload: Array[Byte]): Array[Float] = {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+    private def image(payload: Array[Byte], off: Int, len: Int): Array[Float] = {
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload, off, len))
       require(img != null, "imageio could not decode payload")
       luma(img)
     }
+
+    /** Decoded grayscale intensities in [0,1], row-major. */
+    def decodePixels(payload: Array[Byte]): Array[Float] = image(payload, 0, payload.length)
+
+    private def ascii(p: Array[Byte], off: Int): String = new String(p, off, 4, "US-ASCII")
+
+    private def requireRiff(p: Array[Byte], form: String, minLength: Int): Unit =
+      require(p.length >= minLength && ascii(p, 0) == "RIFF" && ascii(p, 8) == form,
+        s"not a RIFF/$form payload")
+
+    /** The chunks in `p(from until end)`, lazily: (fourcc, body offset,
+      * body length). Every chunk reached has its length checked: a
+      * negative one would stall the walk (-8 advances by 0) or become
+      * a negative sample count, and a huge one would overflow the
+      * offset arithmetic into a negative index. */
+    private def chunks(p: Array[Byte], from: Int, end: Int): Iterator[(String, Int, Int)] =
+      Iterator.unfold(from) { pos =>
+        Option.when(pos + 8 <= end) {
+          val (id, len) = (ascii(p, pos), le32(p, pos + 4))
+          require(len >= 0 && len <= end - (pos + 8), s"malformed RIFF chunk '$id' length $len")
+          ((id, pos + 8, len), pos + 8 + len + (len & 1))
+        }
+      }
+
+    private def le32(p: Array[Byte], off: Int): Int =
+      java.nio.ByteBuffer.wrap(p).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(off)
 
     /** Per-frame decoded grayscale intensities from a Motion-JPEG
       * AVI: RIFF walk to the `movi` LIST, each `..dc` frame chunk
       * through the JDK JPEG reader. */
     def decodeFrames(payload: Array[Byte]): Seq[Array[Float]] = {
-      val bb = java.nio.ByteBuffer.wrap(payload)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      require(payload.length >= 12 &&
-        new String(payload, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(payload, 8, 4, "US-ASCII") == "AVI ",
-        "not a RIFF/AVI payload")
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-      var pos = 12
-      while (pos + 8 <= payload.length) {
-        val id = new String(payload, pos, 4, "US-ASCII")
-        val len = bb.getInt(pos + 4)
-        // upper bound too: a huge corrupt length would overflow the
-        // position arithmetic into a negative index and surface as
-        // StringIndexOutOfBounds instead of this contract's error
-        require(len >= 0 && len <= payload.length - (pos + 8),
-          s"malformed AVI chunk '$id' length $len")
-        if (id == "LIST" && len >= 4 &&
-            new String(payload, pos + 8, 4, "US-ASCII") == "movi") {
-          var p = pos + 12
-          val end = pos + 8 + len
-          while (p + 8 <= end) {
-            val cid = new String(payload, p, 4, "US-ASCII")
-            val clen = bb.getInt(p + 4)
-            require(clen >= 0 && clen <= end - (p + 8),
-              s"malformed AVI chunk '$cid' length $clen")
-            if (cid.endsWith("dc")) {
-              val img = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(payload, p + 8, clen))
-              require(img != null, "imageio could not decode AVI frame")
-              out += luma(img)
-            }
-            p += 8 + clen + (clen & 1)
-          }
-        }
-        pos += 8 + len + (len & 1)
-      }
+      requireRiff(payload, "AVI ", 12)
+      val out = (for {
+        (id, off, len) <- chunks(payload, 12, payload.length)
+        if id == "LIST" && len >= 4 && ascii(payload, off) == "movi"
+        (cid, coff, clen) <- chunks(payload, off + 4, off + len)
+        if cid.endsWith("dc")
+      } yield image(payload, coff, clen)).toSeq
       require(out.nonEmpty, "AVI movi frames not found")
-      out.toSeq
+      out
     }
 
-    /** Decoded PCM16 samples in [-1,1] from a canonical mono WAV. */
+    /** Decoded PCM16 samples in [-1,1] from a canonical mono WAV (the
+      * first `data` chunk, whatever chunks come before it). */
     def decodeSamples(payload: Array[Byte]): Array[Float] = {
-      val bb = java.nio.ByteBuffer.wrap(payload)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      require(payload.length >= 44 &&
-        payload(0) == 'R' && payload(1) == 'I' && payload(2) == 'F' && payload(3) == 'F' &&
-        payload(8) == 'W' && payload(9) == 'A' && payload(10) == 'V' && payload(11) == 'E',
-        "not a RIFF/WAVE payload")
-      // walk chunks to the data chunk (robust to extra chunks)
-      var pos = 12
-      var dataOff = -1; var dataLen = 0
-      while (dataOff < 0 && pos + 8 <= payload.length) {
-        val id = new String(payload, pos, 4, "US-ASCII")
-        val len = bb.getInt(pos + 4)
-        // a corrupt negative length would stall the walk (len = -8
-        // advances by 0) or, on the data chunk itself, turn into a
-        // negative sample count (ADVICE r4); a huge one would
-        // overflow the position arithmetic — fail fast for EVERY
-        // chunk, like every other malformed input
-        require(len >= 0 && len <= payload.length - (pos + 8),
-          s"malformed WAV chunk '$id' length $len")
-        if (id == "data") { dataOff = pos + 8; dataLen = len }
-        else pos += 8 + len + (len & 1)
-      }
-      require(dataOff > 0, "WAV data chunk not found")
-      val n = math.min(dataLen, payload.length - dataOff) / 2
-      Array.tabulate(n)(k => bb.getShort(dataOff + 2 * k) / 32768.0f)
+      requireRiff(payload, "WAVE", 44)
+      val (_, off, len) = chunks(payload, 12, payload.length).find(_._1 == "data")
+        .getOrElse(throw new IllegalArgumentException("WAV data chunk not found"))
+      val bb = java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      Array.tabulate(len / 2)(k => bb.getShort(off + 2 * k) / 32768.0f)
     }
 
     private def fold(signal: Array[Float], dim: Int): Array[Float] = {

@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.Kernels
+import graft.functions.VectorKernels
 import graft.gen.TokenGen
 
 /**
@@ -41,17 +43,30 @@ object Similarity {
       queries: DataFrame,
       k: Int = 5,
       excludeSelf: Boolean = true): DataFrame = {
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv"))
-    val scored = c.join(broadcast(q),
-        if (excludeSelf) col("q_id") =!= col("n_id") else lit(true))
-      .withColumn("cos", Kernels.cosineSim(col("qv"), col("nv")))
+    val pairs = vectors(corpus, "n").join(broadcast(vectors(queries, "q")),
+      if (excludeSelf) col("q_id") =!= col("n_id") else lit(true))
+    topK(pairs, k)
+  }
+
+  /** (`<side>_id`, `<side>v`): a vector table renamed for one side of a pair. */
+  private def vectors(emb: DataFrame, side: String): DataFrame =
+    emb.select(col("vec_id").as(s"${side}_id"), col("embedding").as(s"${side}v"))
+
+  /** (q_id, rank, n_id): the `k` nearest n per q by exact cosine, ties
+    * to the lower n_id, over (q_id, qv, n_id, nv) pairs. */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
+    pairs.withColumn("cos", Kernels.cosineSim(col("qv"), col("nv")))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"))
       .orderBy(col("q_id"), col("rank"))
   }
+
+  /** [[topK]] over candidate (q_id, n_id) pairs, vectors joined on. */
+  private def rankCandidates(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+      k: Int): DataFrame =
+    topK(cand.join(vectors(queries, "q"), Seq("q_id")).join(vectors(corpus, "n"), Seq("n_id")), k)
 
   /** (vec_id, table, bucket) rows: bucket = sign bits of the vector
     * against each hyperplane of the table, via the fused
@@ -101,16 +116,9 @@ object Similarity {
       val sums = Array.fill(nCells)(new Array[Double](dim))
       val counts = new Array[Int](nCells)
       sample.foreach { v =>
-        var best = 0; var bestCos = Double.MinValue
-        var c = 0
-        while (c < nCells) {
-          var dot = 0.0; var nv = 0.0; var nc = 0.0
-          var i = 0
-          while (i < dim) { dot += v(i) * cents(c)(i); nv += v(i) * v(i); nc += cents(c)(i) * cents(c)(i); i += 1 }
-          val cos = if (nv == 0.0 || nc == 0.0) 0.0 else dot / math.sqrt(nv * nc)
-          if (cos > bestCos) { bestCos = cos; best = c }
-          c += 1
-        }
+        // the corpus's own assignment kernel: nearest cell, ties → lower index
+        val best = VectorKernels.probeCells(
+          UnsafeArrayData.fromPrimitiveArray(v), cents, 1, isFloat = false).getInt(0)
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
         counts(best) += 1
@@ -153,15 +161,7 @@ object Similarity {
       .join(cells, Seq("cell"))
       .select(col("q_id"), col("vec_id").as("n_id"))
       .filter(col("q_id") =!= col("n_id"))
-    val scored = cand
-      .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("qv")), Seq("q_id"))
-      .join(corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv")), Seq("n_id"))
-      .withColumn("cos", Kernels.cosineSim(col("qv"), col("nv")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"))
-      .orderBy(col("q_id"), col("rank"))
+    rankCandidates(cand, corpus, queries, k)
   }
 
   /** Approximate top-k: exact ranking restricted to bucket-sharing
@@ -180,14 +180,6 @@ object Similarity {
     val cand = qb.join(cb, Seq("tbl", "bucket"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id")).dropDuplicates("q_id", "n_id")
-    val scored = cand
-      .join(queries.select(col("vec_id").as("q_id"), col("embedding").as("qv")), Seq("q_id"))
-      .join(corpus.select(col("vec_id").as("n_id"), col("embedding").as("nv")), Seq("n_id"))
-      .withColumn("cos", Kernels.cosineSim(col("qv"), col("nv")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"))
-      .orderBy(col("q_id"), col("rank"))
+    rankCandidates(cand, corpus, queries, k)
   }
 }

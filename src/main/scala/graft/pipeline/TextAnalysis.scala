@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Kernels
 
+import Dedup.words
+
 /**
  * Text-analysis operators over the `documents` table: token counting,
  * quality scoring, language-ID, and content fingerprinting — the
@@ -22,8 +24,6 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "es"),
     "fr" -> Seq("le", "la", "de", "et", "les", "des", "une", "est"),
     "zh" -> Seq("的", "是", "不", "了", "在", "人", "有", "我"))
-
-  private def words(c: Column): Column = split(c, " ")
 
   /** Counts/lengths export as BIGINT: DuckDB len()/length() are
     * int64, Spark size()/length() int32 — physical-width parity for

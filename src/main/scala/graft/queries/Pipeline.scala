@@ -80,11 +80,7 @@ object Pipeline {
 
   /** Media corpus size scaled to the sf dir (shared with Verify's
     * export so the DuckDB oracle sees the same rows). */
-  def mediaCount(dir: String): Long = TokenEngine.scaleOf(dir) match {
-    case s if s >= 0.1  => 2000L
-    case s if s >= 0.01 => 500L
-    case _              => 200L
-  }
+  def mediaCount(dir: String): Long = TokenEngine.scaled(dir, 200L, 500L, 2000L)
 
   def multimodalStats(spark: SparkSession, dir: String): DataFrame =
     Multimodal.kindStats(Multimodal.extractFeatures(

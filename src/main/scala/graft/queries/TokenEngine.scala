@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.gen.TokenGen
 import graft.extract.ExtractCompiler
 import graft.model._
@@ -29,23 +30,30 @@ object TokenEngine {
     * details_join would otherwise re-execute per branch. Content is
     * pure-seeded (TokenGen, seed=42), so the file is a deterministic
     * fixture, same standing as /root/testdata/sf*. */
-  def docsFor(spark: SparkSession, dir: String): DataFrame = {
-    val n = scaleOf(dir) match {
-      case s if s >= 0.1  => 200000L
-      case s if s >= 0.01 => 20000L
-      case _              => 2000L
-    }
-    spark.read.parquet(materializedTable(spark, n))
+  def docsFor(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(materializedTable(spark, docCount(dir)))
+
+  /** Docs of the sf directory: the token table's rows, and the docs of
+    * [[sessionStitch]]'s fragment stream. */
+  private def docCount(dir: String): Long = scaled(dir, 2000L, 20000L, 200000L)
+
+  /** Where the token tables live: RAM-backed /dev/shm when writable. */
+  private[graft] lazy val tableBase: java.nio.file.Path = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    if (java.nio.file.Files.isWritable(shm)) shm
+    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
   private val tableLock = new Object
   private def materializedTable(spark: SparkSession, n: Long): String =
     tableLock.synchronized {
-      val base = {
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isWritable(shm)) shm
-        else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      }
+      val base = tableBase
+      // a JVM killed mid-write (say, by a timeout) leaves its tmp table
+      // behind in RAM: remove every one whose owner is gone
+      scala.util.Using.resource(java.nio.file.Files.list(base))(_.iterator().asScala.toList)
+        .filter(_.getFileName.toString.matches("""graft-tokens-v1-n\d+\.tmp-\d+"""))
+        .filterNot(graft.bench.CorpusCache.ownerLive)
+        .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
       val dir = base.resolve(s"graft-tokens-v1-n$n")
       val done = dir.resolve("_SUCCESS")
       if (!java.nio.file.Files.exists(done)) {
@@ -83,6 +91,14 @@ object TokenEngine {
 
   def scaleOf(dir: String): Double =
     "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble).getOrElse(0.001)
+
+  /** The size for the sf of `dir`: `small` below sf0.01, `medium` below
+    * sf0.1, `large` from sf0.1 up. */
+  def scaled(dir: String, small: Long, medium: Long, large: Long): Long = scaleOf(dir) match {
+    case s if s >= 0.1  => large
+    case s if s >= 0.01 => medium
+    case _              => small
+  }
 
   /** The flagship spec (port of the persons_cards payload shape,
     * reference scrape/scrape_test.go:35-68): two fields × several
@@ -274,14 +290,9 @@ object TokenEngine {
   /** Origin keys of the crawl queries — also exported verbatim by
     * Verify as the DuckDB oracle's origin table (single definition:
     * a divergent copy would make the oracle walk different chains). */
-  private[graft] def crawlOrigins(spark: SparkSession, dir: String): DataFrame = {
-    val n = scaleOf(dir) match {
-      case s if s >= 0.1  => 20000L
-      case s if s >= 0.01 => 2000L
-      case _              => 200L
-    }
-    spark.range(n).select(format_string("crawl/%06d", col("id")).as("origin"))
-  }
+  private[graft] def crawlOrigins(spark: SparkSession, dir: String): DataFrame =
+    spark.range(scaled(dir, 200L, 2000L, 20000L))
+      .select(format_string("crawl/%06d", col("id")).as("origin"))
 
   /** Pagination crawl (J2 generator side, reference
     * paginate/paginate.go + scrape.go:394-427): BySelector chains over
@@ -374,20 +385,12 @@ object TokenEngine {
       .orderBy(col("doc_id"))
   }
 
-  /** Docs count backing [[sessionStitch]]'s fragment stream (same
-    * scaling as docsFor). */
-  private def stitchDocsOf(dir: String): Long = scaleOf(dir) match {
-    case s if s >= 0.1  => 200000L
-    case s if s >= 0.01 => 20000L
-    case _              => 2000L
-  }
-
   /** The stitch driver row's input: the deterministic fragment stream
     * minus late rows (the watermark's drop set — pinned separately by
     * StreamingSpec's late-drop tests), with event_time flattened to ms
     * for export. Shared verbatim with Verify's `stitch_frags` export. */
   private[graft] def stitchFragments(spark: SparkSession, dir: String): DataFrame =
-    graft.gen.TokenGen.fragments(spark, stitchDocsOf(dir))
+    graft.gen.TokenGen.fragments(spark, docCount(dir))
       .filter(!col("is_late"))
       .select(col("doc_id"), col("source"), col("page_idx"), col("frag_idx"),
         unix_millis(col("event_time")).as("event_ms"),
@@ -437,11 +440,7 @@ object TokenEngine {
     * verbatim by Verify as `jar_events` — single definition; the
     * oracle re-derives only the FOLD. */
   private[graft] def jarEvents(spark: SparkSession, dir: String): DataFrame = {
-    val nUsers = scaleOf(dir) match {
-      case s if s >= 0.1  => 10000L
-      case s if s >= 0.01 => 1000L
-      case _              => 100L
-    }
+    val nUsers = scaled(dir, 100L, 1000L, 10000L)
     docsFor(spark, dir).select(
       col("doc_id"),
       concat(lit("u-"), pmod(xxhash64(col("doc_id"), lit("jar-u")), lit(nUsers)))

@@ -86,15 +86,11 @@ object Paginate {
   /** Next key from the page content (reference BySelector,
     * paginate/paginate.go:39-46): the decoded first non-empty payload
     * of the `tag` field anywhere in the page is the next key; no such
-    * field (or an empty payload) → null (stop). Reuses the extraction
-    * kernels, so the whole derivation stays in codegen. */
-  def nextKeyBySelector(tokens: Column, tag: Int): Column = {
-    val perBlock = transform(
-      Kernels.splitBlocks(tokens, TokenCodec.RECORD_START),
-      b => Kernels.payloadsForTag(Kernels.splitFields(b, TokenCodec.FIELD_DELIM), tag))
-    val nonEmpty = filter(flatten(perBlock), p => size(p) > 0)
-    when(size(nonEmpty) > 0, Kernels.decodeJoin(element_at(nonEmpty, 1)))
-  }
+    * field (or an empty payload) → null (stop). One kernel call over
+    * the extraction kernels, so the whole derivation stays in codegen
+    * (a `transform`/`filter` lambda would not: both are CodegenFallback). */
+  def nextKeyBySelector(tokens: Column, tag: Int): Column =
+    nullif(Kernels.firstTagText(tokens, TokenCodec.RECORD_START, TokenCodec.FIELD_DELIM, tag), lit(""))
 
   /**
    * Iterative crawl from `origins` (column `origin`): fetch each

@@ -23,10 +23,9 @@ import graft.model.TokenCodec
  * Arguments are `inputs` followed by the literal ints named in `ints`
  * (with their SQL defaults), in the kernel method's order. `sql` is
  * empty for kernels whose constants are objects (Column API only).
- * A kernel with a [[Kernel.Vector]] input has float and double forms:
- * `method` takes one `isFloat` flag per vector after its other
- * arguments, and `sameType` names the flag-free forms for all-float
- * and all-double vectors ([[FloatOrDouble]] picks one).
+ * A kernel with a [[Kernel.Vector]] input reads float and double
+ * vectors alike: `method` takes one `isFloat` flag per vector after its
+ * other arguments, which [[FloatOrDouble]] appends as literals.
  *
  * Lives in the org.apache.spark.sql package tree because
  * `ExpressionUtils` and `TypeCollection` are `private[sql]`.
@@ -38,21 +37,20 @@ final case class Kernel(
     method: String,
     returns: DataType,
     inputs: Seq[AbstractDataType],
-    ints: Seq[(String, Option[Int])] = Nil,
-    sameType: Option[(String, String)] = None) {
+    ints: Seq[(String, Option[Int])] = Nil) {
 
   def node(args: Seq[Expression]): Expression =
     if (inputs.contains(Kernel.Vector)) FloatOrDouble(this, args)
-    else invoke(method, args)
+    else invoke(args)
 
   def apply(args: Column*): Column =
     ExpressionUtils.column(node(args.map(ExpressionUtils.expression)))
 
   private[graft] def argTypes: Seq[AbstractDataType] = inputs ++ ints.map(_ => IntegerType)
 
-  private[graft] def invoke(m: String, args: Seq[Expression],
+  private[graft] def invoke(args: Seq[Expression],
       types: Seq[AbstractDataType] = argTypes): Expression =
-    StaticInvoke(obj.getClass, returns, m, args, inputTypes = types, returnNullable = false)
+    StaticInvoke(obj.getClass, returns, method, args, inputTypes = types, returnNullable = false)
 }
 
 object Kernel {
@@ -91,12 +89,14 @@ object Kernel {
   val tokenIntJoin = Kernel("token_int_join",
     "token_int_join(payloads) - decimal tokens space-joined, payloads '|'-joined",
     TokenKernels, "intJoinAll", StringType, Seq(Nested))
+  val tokenFirstTagText = Kernel("", "",
+    TokenKernels, "firstTagText", StringType, Seq(ArrayType(IntegerType)),
+    Seq("record_start" -> None, "delim" -> None, "tag" -> None))
   val synthPage = Kernel("", "",
     TokenGen, "synthPage", Ints, Seq(StringType, ObjectType(classOf[String])))
   val graftCosine = Kernel("graft_cosine",
     "graft_cosine(a, b) - cosine similarity of two numeric arrays",
-    VectorKernels, "cosineM", DoubleType, Seq(Vector, Vector),
-    sameType = Some(("cosineF", "cosineD")))
+    VectorKernels, "cosine", DoubleType, Seq(Vector, Vector))
   val graftSimhash64 = Kernel("graft_simhash64",
     "graft_simhash64(words) - 64-bit SimHash of a word array",
     VectorKernels, "simhash64", LongType, Seq(Words))
@@ -121,30 +121,25 @@ object Kernel {
     VectorKernels, "probeCells", Ints, Seq(Vector, Planes), Seq("n_probe" -> None))
 
   val all: Seq[Kernel] = Seq(tokenBlocks, tokenFields, tokenPayloads, tokenDecode,
-    tokenDecodeAll, tokenFindAll, tokenFindAllFlat, tokenIntJoin, synthPage,
+    tokenDecodeAll, tokenFindAll, tokenFindAllFlat, tokenIntJoin, tokenFirstTagText, synthPage,
     graftCosine, graftSimhash64, graftShingles, graftGramHashes, graftWinnow,
     hyperBucket, minhashSig, ivfProbes)
 }
 
-/** The float/double dispatch of a [[Kernel]] with [[Kernel.Vector]]
-  * inputs: after analysis, the vectors' element types pick the kernel
-  * form, which the optimizer swaps in as a plain `StaticInvoke`. */
+/** The float/double flags of a [[Kernel]] with [[Kernel.Vector]]
+  * inputs: after analysis, each vector's element type becomes one
+  * `isFloat` literal, and the optimizer swaps in a plain `StaticInvoke`. */
 case class FloatOrDouble(kernel: Kernel, children: Seq[Expression])
     extends RuntimeReplaceable with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] = kernel.argTypes
 
   override lazy val replacement: Expression = {
-    val floats = children.zip(kernel.inputs).collect {
-      case (c, Kernel.Vector) => c.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    val args = children ++ children.zip(kernel.inputs).collect {
+      case (c, Kernel.Vector) => Literal(c.dataType.asInstanceOf[ArrayType].elementType == FloatType)
     }
     // concrete input types: the plan ships to executors, and a
     // TypeCollection is not serializable
-    def call(m: String, args: Seq[Expression]) = kernel.invoke(m, args, args.map(_.dataType))
-    kernel.sameType match {
-      case Some((f, _)) if floats.forall(identity) => call(f, children)
-      case Some((_, d)) if !floats.contains(true) => call(d, children)
-      case _ => call(kernel.method, children ++ floats.map(Literal(_)))
-    }
+    kernel.invoke(args, args.map(_.dataType))
   }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): FloatOrDouble =
@@ -167,6 +162,8 @@ object Kernels {
   def findAllFlat(payloads: Column, p: Seq[Int]): Column =
     Kernel.tokenFindAllFlat(payloads, pattern(p))
   def intJoinAll(payloads: Column): Column = Kernel.tokenIntJoin(payloads)
+  def firstTagText(tokens: Column, recordStart: Int, delim: Int, tag: Int): Column =
+    Kernel.tokenFirstTagText(tokens, lit(recordStart), lit(delim), lit(tag))
   /** `synth_page(key) -> array<int>`: the synthetic web's key→page
     * function (TokenGen.synthTokens), the stand-in for a stored-table
     * lookup in the details and crawl resolvers. */

@@ -81,13 +81,14 @@ class ExtensionsSpec extends SparkSuite {
     val vecs = spark.sparkContext
       .parallelize(rows.map { case (a, b) => (a, b, a.map(_.toFloat), b.map(_.toFloat)) }, 1)
       .toDF("ad", "bd", "af", "bf")
-    for ((l, r, method) <- Seq(("af", "bf", "cosineF"), ("ad", "bd", "cosineD"),
-        ("af", "bd", "cosineM"), ("ad", "bf", "cosineM"));
+    for ((l, r, flags) <- Seq(("af", "bf", ", true, true)"), ("ad", "bd", ", false, false)"),
+        ("af", "bd", ", true, false)"), ("ad", "bf", ", false, true)"));
         c <- Seq(Kernels.cosineSim(col(l), col(r)), expr(s"graft_cosine($l, $r)"))) {
       val q = vecs.select(c)
       val plan = q.queryExecution.optimizedPlan.toString
-      assert(plan.contains(method) && !plan.toLowerCase.contains("cast("),
-        s"$l x $r: expected $method without casts:\n$plan")
+      assert(plan.contains("VectorKernels.cosine(") && plan.contains(flags) &&
+        !plan.toLowerCase.contains("cast("),
+        s"$l x $r: expected cosine(...$flags without casts:\n$plan")
       assert(q.collect().map(_.getDouble(0)).toSeq == want, s"$l x $r diverged from the oracle")
     }
 

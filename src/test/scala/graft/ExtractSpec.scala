@@ -52,6 +52,24 @@ class ExtractSpec extends SparkSuite {
     assert(cols.contains("Names_text") && cols.contains("Images_count"))
   }
 
+  test("token-table cache: docsFor removes a dead writer's tmp table, never a live one's") {
+    // a pid whose process has exited, and this JVM's own (live) pid
+    val exited = new ProcessBuilder("true").start()
+    exited.waitFor()
+    val dead = TokenEngine.tableBase.resolve(s"graft-tokens-v1-n2000.tmp-${exited.pid()}")
+    val live = TokenEngine.tableBase.resolve(
+      s"graft-tokens-v1-n1.tmp-${ProcessHandle.current().pid()}")
+    try {
+      for (d <- Seq(dead, live)) {
+        java.nio.file.Files.createDirectories(d)
+        java.nio.file.Files.writeString(d.resolve("part-0"), "x")
+      }
+      TokenEngine.docsFor(spark, "sf0.001")
+      assert(!java.nio.file.Files.exists(dead), s"$dead survived docsFor")
+      assert(java.nio.file.Files.exists(live), s"$live (live owner) was removed")
+    } finally Seq(dead, live).foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+  }
+
   test("nil-omission: zero matches -> null column; includeIfEmpty -> empty") {
     // doc with a single block containing only tag 5
     val docs = Seq(("d1", Array(2, 5, 100, 1), 4, "s1")).toDF("doc_id", "tokens", "n_tok", "source")

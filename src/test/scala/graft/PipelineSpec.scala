@@ -249,7 +249,7 @@ class PipelineSpec extends SparkSuite {
 
   test("multimodal: JDK decoder decodes real PNG and WAV payloads (golden values)") {
     // 2x2 PNG: white, black, pure red, pure blue — known luma values
-    val png = Multimodal.encodePng(2, 2, Array(0xFFFFFF, 0x000000, 0xFF0000, 0x0000FF))
+    val png = Multimodal.encodeImage("png", 2, 2, Array(0xFFFFFF, 0x000000, 0xFF0000, 0x0000FF))
     assert(png.take(8).toSeq ==
       Seq(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte),
       "payload is not a real PNG (magic mismatch)")
@@ -276,8 +276,8 @@ class PipelineSpec extends SparkSuite {
   test("multimodal: JDK decoder decodes real MJPEG-AVI video payloads (golden values)") {
     // two 2x2 flat-gray frames — flat JPEG blocks decode near-exactly,
     // so the lossy codec still pins golden values within tolerance
-    val f1 = Multimodal.encodeJpeg(2, 2, Array.fill(4)(0x808080)) // luma 128/255
-    val f2 = Multimodal.encodeJpeg(2, 2, Array.fill(4)(0x404040)) // luma 64/255
+    val f1 = Multimodal.encodeImage("jpg", 2, 2, Array.fill(4)(0x808080)) // luma 128/255
+    val f2 = Multimodal.encodeImage("jpg", 2, 2, Array.fill(4)(0x404040)) // luma 64/255
     val avi = Multimodal.encodeAvi(2, 2, 10, Seq(f1, f2))
     assert(new String(avi, 0, 4, "US-ASCII") == "RIFF" &&
       new String(avi, 8, 4, "US-ASCII") == "AVI ",
@@ -302,6 +302,29 @@ class PipelineSpec extends SparkSuite {
     // contract as the PNG/WAV paths
     intercept[IllegalArgumentException] {
       Multimodal.JdkDecoder.decodeFrames("not a riff container".getBytes("US-ASCII"))
+    }
+  }
+
+  test("multimodal: a corrupt RIFF chunk length fails as IllegalArgumentException") {
+    val le = java.nio.ByteOrder.LITTLE_ENDIAN
+    def withInt(bytes: Array[Byte], off: Int, v: Int): Array[Byte] = {
+      val b = bytes.clone(); java.nio.ByteBuffer.wrap(b).order(le).putInt(off, v); b
+    }
+    val wav = Multimodal.encodeWav(16000, Array[Short](1, 2, 3, 4)) // data length at 40
+    val avi = Multimodal.encodeAvi(2, 2, 10,
+      Seq(Multimodal.encodeImage("jpg", 2, 2, Array.fill(4)(0x808080))))
+    def at(fourcc: String): Int = new String(avi, "ISO-8859-1").indexOf(fourcc)
+    val cases = Seq[(String, () => Any)](
+      "WAV data length -8" -> (() => Multimodal.JdkDecoder.decodeSamples(withInt(wav, 40, -8))),
+      "WAV data length past the end" ->
+        (() => Multimodal.JdkDecoder.decodeSamples(withInt(wav, 40, wav.length))),
+      "AVI top-level chunk past the end" ->
+        (() => Multimodal.JdkDecoder.decodeFrames(withInt(avi, at("LIST") + 4, avi.length))),
+      "AVI movi chunk length negative" ->
+        (() => Multimodal.JdkDecoder.decodeFrames(withInt(avi, at("00dc") + 4, -8))))
+    for ((name, decode) <- cases) {
+      val e = intercept[Throwable](decode())
+      assert(e.getClass == classOf[IllegalArgumentException], s"$name: threw $e")
     }
   }
 

@@ -79,6 +79,14 @@ class PlanSpec extends SparkSuite {
       assert(s"\\*\\(\\d+\\) Project .*${call(k)}".r.findFirstIn(p).nonEmpty,
         s"$k not in codegen span:\n$p")
     assert(!p.toLowerCase.contains("codegenfallback"), "kernel expressions must codegen")
+    // the crawl's next-key derivation, once per fetched page
+    // (an RDD, not a local relation, so the projection is not folded away)
+    val pages = spark.sparkContext.parallelize(Seq(Array(2, 7, 100, 1)), 1).toDF("tokens")
+    val next = physical(pages.select(
+      graft.streaming.Paginate.nextKeyBySelector(col("tokens"), TokenEngine.NEXT_TAG)))
+    assert(s"\\*\\(\\d+\\) Project .*${call("firstTagText")}".r.findFirstIn(next).nonEmpty,
+      s"next key not in codegen span:\n$next")
+    assert(!next.toLowerCase.contains("codegenfallback"), s"next key must codegen:\n$next")
   }
 
   test("filter and projection push into the parquet scan") {

@@ -106,8 +106,8 @@ class PropertySpec extends AnyFunSuite {
     val vec = Gen.nonEmptyListOf(Gen.choose(-100, 100).map(_.toFloat / 10f))
       .map(_.toArray)
     check(Prop.forAll(vec, vec) { (a, b) =>
-      def c(x: Array[Float], y: Array[Float]) = VectorKernels.cosineF(
-        ArrayData.toArrayData(x), ArrayData.toArrayData(y))
+      def c(x: Array[Float], y: Array[Float]) = VectorKernels.cosine(
+        ArrayData.toArrayData(x), ArrayData.toArrayData(y), true, true)
       val ab = c(a, b)
       val selfOk = a.forall(_ == 0f) || math.abs(c(a, a) - 1.0) < 1e-9
       math.abs(ab - c(b, a)) < 1e-12 && selfOk && math.abs(ab) <= 1.0 + 1e-12

@@ -15,7 +15,19 @@ for p in glob.glob(os.path.join(sfdir, "*.parquet")):
 
 oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
 fail = 0
+# a query that threw in Verify may have left an earlier run's output in
+# <out>/<name>/: its listed failure, not that parquet, is the result
+fpath = os.path.join(outdir, "verify_failures.json")
+if os.path.exists(fpath):
+    failed = json.load(open(fpath))
+else:
+    print(f"FAIL: {fpath} missing: Verify did not finish"); fail += 1
+    failed = {}
+for name in sorted(set(failed) - set(oracle)):
+    print(f"FAIL {name}: Verify failed: {failed[name]}"); fail += 1
 for name, sql in sorted(oracle.items()):
+    if name in failed:
+        print(f"FAIL {name}: Verify failed: {failed[name]}"); fail += 1; continue
     res_dir = os.path.join(outdir, name)
     files = glob.glob(os.path.join(res_dir, "*.parquet"))
     if not files:
