@@ -58,7 +58,8 @@ object Verify {
     // DuckDB rank the SAME candidate set independently (the bucketing
     // itself is seeded-constant, verified by the recall test)
     graft.pipeline.Similarity
-      .lshCandidates(spark.read.parquet(s"$sfDir/embeddings.parquet"))
+      .lshCandidates(spark.read.parquet(s"$sfDir/embeddings.parquet"),
+        graft.pipeline.Similarity.AnnTables)
       .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/ann_buckets")
     graft.pipeline.Dedup
       .simhashSigs(spark.read.parquet(s"$sfDir/documents.parquet"))
@@ -68,11 +69,10 @@ object Verify {
     graft.pipeline.TextAnalysis
       .winnowGrams(spark.read.parquet(s"$sfDir/documents.parquet"))
       .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/winnow_grams")
-    // near-dup LSH bucket table (24 tables × 4 planes — the
-    // embedNearDupLsh parameters)
+    // near-dup LSH bucket table (the embedNearDupLsh tables)
     graft.pipeline.Similarity
       .lshCandidates(spark.read.parquet(s"$sfDir/embeddings.parquet"),
-        nTables = 24, nPlanes = 4)
+        graft.pipeline.Dedup.NearDupTables)
       .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/neardup_buckets")
     // IVF cell assignments + query probe lists (same deterministic-
     // bucketing-export scheme as ann_buckets)
@@ -82,7 +82,7 @@ object Verify {
       graft.pipeline.Similarity.ivfCells(e, cents)
         .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/ivf_cells")
       graft.pipeline.Similarity
-        .ivfProbeRows(e.filter(org.apache.spark.sql.functions.col("vec_id") < 10), cents, 4)
+        .ivfProbeRows(graft.queries.Pipeline.annQueries(e), cents)
         .write.mode("overwrite").parquet(s"$outDir/.oracle_tables/ivf_probes")
     }
     // a failing query is recorded and skipped, not fatal: the other

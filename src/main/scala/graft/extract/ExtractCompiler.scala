@@ -41,8 +41,8 @@ object ExtractCompiler {
    * RECORD_START yield a single whole-array block (the `<body>`
    * fallback, reference structure.go:139-144).
    */
-  def segment(df: DataFrame, tokensCol: String = "tokens"): DataFrame = {
-    val blocks = Kernels.splitBlocks(col(tokensCol), RECORD_START)
+  def segment(df: DataFrame): DataFrame = {
+    val blocks = Kernels.splitBlocks(col("tokens"), RECORD_START)
     df.select(col("*"), posexplode(blocks).as(Seq("block_idx", "block_tokens")))
   }
 

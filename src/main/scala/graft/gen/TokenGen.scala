@@ -39,6 +39,9 @@ final case class Fragment(
 object TokenGen {
   val SEED: Long = 42L
   val BASE_EPOCH_MS: Long = 1767225600000L // 2026-01-01T00:00:00Z — fixed, no wall clock
+  /** Sources of the generated table and fragment stream, and their skew. */
+  private val N_SOURCES = 32
+  private val ZIPF_EXPONENT = 1.2
 
   /** xorshift64* step. */
   @inline private def next(x0: Long): Long = {
@@ -67,8 +70,8 @@ object TokenGen {
 
   /** Zipf(1.2) cumulative weights over nSources (hot-source skew per
     * north_rule "skew handled explicitly"). */
-  def zipfCdf(nSources: Int, exponent: Double = 1.2): Array[Double] = {
-    val w = Array.tabulate(nSources)(k => 1.0 / math.pow(k + 1.0, exponent))
+  def zipfCdf(nSources: Int): Array[Double] = {
+    val w = Array.tabulate(nSources)(k => 1.0 / math.pow(k + 1.0, ZIPF_EXPONENT))
     val total = w.sum
     val cdf = new Array[Double](nSources)
     var acc = 0.0
@@ -164,9 +167,9 @@ object TokenGen {
 
   /** The full fragment stream as a typed Dataset — distributed, seeded,
     * no driver-side materialization. */
-  def fragments(spark: SparkSession, nDocs: Long, nSources: Int = 32): Dataset[Fragment] = {
+  def fragments(spark: SparkSession, nDocs: Long): Dataset[Fragment] = {
     import spark.implicits._
-    val cdf = zipfCdf(nSources)
+    val cdf = zipfCdf(N_SOURCES)
     spark.range(nDocs).flatMap(i => docFragments(i, cdf))
   }
 
@@ -223,9 +226,9 @@ object TokenGen {
   /** Canonical stored table per input_hint: one row per document
     * (fragments pre-stitched, duplicates dropped) — what the Iceberg
     * table of pre-tokenized sequences would contain at rest. */
-  def table(spark: SparkSession, nDocs: Long, nSources: Int = 32): DataFrame = {
+  def table(spark: SparkSession, nDocs: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fr = fragments(spark, nDocs, nSources)
+    val fr = fragments(spark, nDocs)
     fr.where(!col("is_dup"))
       .groupBy(col("doc_id"), col("source"))
       .agg(sort_array(collect_list(struct(col("page_idx"), col("tokens")))).as("parts"))

@@ -30,12 +30,25 @@ import org.apache.spark.sql.graft.Kernels
  */
 object Dedup {
 
+  /** Words per shingle of every shingle-set operator. */
+  private val ShingleWords = 3
+  /** MinHash banding: bands × rows per band = signature length. */
+  private val Bands = 8
+  private val RowsPerBand = 4
+  /** SimHash pair bound; 4 bands of 16 bits find every pair within it
+    * by pigeonhole only while it is ≤ 3. */
+  private val MaxHamming = 3
+  /** Blocks of the exact embedding near-dup's block-pair plan. */
+  private val Blocks = 8
+  /** LSH tables of [[embedNearDupLsh]]. */
+  val NearDupTables = 24
+
   /** Exact dedup by content hash: canonical row = min doc_id per
     * digest (deterministic winner, like the reference's first-write-
     * wins KV key). */
-  def exact(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def exact(docs: DataFrame): DataFrame =
     docs
-      .groupBy(md5(col(textCol)).as("text_hash"))
+      .groupBy(md5(col("text")).as("text_hash"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
       .orderBy(col("canonical_id"))
 
@@ -46,12 +59,12 @@ object Dedup {
   /** Distinct n-word shingles of a document, as strings — fused
     * codegen kernel (the array_distinct(transform(sequence...)) chain
     * is interpreted and was a large share of every dedup query). */
-  def shingles(textCol: Column, n: Int = 3): Column =
-    Kernels.shingleSet(words(textCol), n)
+  def shingles(textCol: Column): Column =
+    Kernels.shingleSet(words(textCol), ShingleWords)
 
   /** doc_id + distinct shingle set (shared by jaccard + minhash). */
-  def shingleSets(docs: DataFrame, n: Int = 3): DataFrame =
-    docs.select(col("doc_id"), shingles(col("text"), n).as("sh"))
+  def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), shingles(col("text")).as("sh"))
 
   /** Cache + eager materialization: the shingle computation is an
     * interpreted higher-order-function chain referenced from several
@@ -81,9 +94,8 @@ object Dedup {
    * stay the FULL distinct-shingle counts, and the DuckDB oracle
    * applies the identical cap.
    */
-  def jaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.2,
-      maxDf: Int = 100): DataFrame = {
-    val sets = materialized(shingleSets(docs, n))
+  def jaccardPairs(docs: DataFrame, threshold: Double, maxDf: Int = 100): DataFrame = {
+    val sets = materialized(shingleSets(docs))
     val sizes = sets.select(col("doc_id"), size(col("sh")).as("n_sh"))
     // the inverted index joins on xxhash64 of the shingle, not the
     // string: intersection counts are identical modulo 64-bit
@@ -120,11 +132,11 @@ object Dedup {
     * runtime error, so the classic mod-2^64 trick is out). */
   private val MinhashP = 2147483647L
 
-  /** Deterministic MinHash permutation parameters (seeded; a ∈ [1,p),
-    * b ∈ [0,p)). */
-  private[pipeline] def minhashParams(k: Int, seed: Long = 42L): Seq[(Long, Long)] = {
-    val rng = new graft.gen.TokenGen.Rng(seed)
-    Seq.fill(k)((1L + (rng.nextLong() >>> 33) % (MinhashP - 1),
+  /** Deterministic MinHash permutation parameters, one per signature
+    * row (seeded; a ∈ [1,p), b ∈ [0,p)). */
+  private def minhashParams: Seq[(Long, Long)] = {
+    val rng = new graft.gen.TokenGen.Rng(graft.gen.TokenGen.SEED)
+    Seq.fill(Bands * RowsPerBand)((1L + (rng.nextLong() >>> 33) % (MinhashP - 1),
       (rng.nextLong() >>> 33) % MinhashP))
   }
 
@@ -137,28 +149,21 @@ object Dedup {
    * (docs × shingles × k expression evals; same lesson as the
    * extraction TokenKernels).
    */
-  def minhashSignature(sh: Column, k: Int = 32, seed: Long = 42L): Column = {
-    val params = minhashParams(k, seed)
+  def minhashSignature(sh: Column): Column = {
+    val params = minhashParams
     Kernels.minhashSig(
       sh, params.map(_._1).toArray, params.map(_._2).toArray, MinhashP)
   }
 
   /**
-   * MinHash + LSH banding: k=bands*rows signature, band key =
+   * MinHash + LSH banding: Bands × RowsPerBand signature, band key =
    * murmur hash of the band's slice; docs sharing any band key are
    * candidates; candidates verified with EXACT Jaccard on the shingle
    * sets (array_intersect — only for candidate pairs). Returns
    * verified pairs with Jaccard ≥ threshold.
    */
-  def minhashLsh(
-      docs: DataFrame,
-      n: Int = 3,
-      bands: Int = 8,
-      rowsPerBand: Int = 4,
-      threshold: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    val k = bands * rowsPerBand
-    val sets = materialized(shingleSets(docs, n).filter(size(col("sh")) > 0))
+  def minhashLsh(docs: DataFrame, threshold: Double): DataFrame = {
+    val sets = materialized(shingleSets(docs).filter(size(col("sh")) > 0))
     // ONLY (doc_id, band, bkey) enters the band exchange — k ints per
     // doc, as the module contract promises. The shingle sets stay in
     // `sets` and are joined back by doc_id AFTER candidate dedup, so
@@ -166,11 +171,11 @@ object Dedup {
     // bands× per document. (Round-1 carried `sh` through the band
     // self-join — the dominant shuffle at scale.)
     val sig = sets.select(col("doc_id"),
-      minhashSignature(col("sh"), k, seed).as("sig"))
+      minhashSignature(col("sh")).as("sig"))
     val banded = sig.select(col("doc_id"),
-      explode(array((0 until bands).map(bIdx =>
+      explode(array((0 until Bands).map(bIdx =>
         struct(lit(bIdx).as("band"),
-          hash(slice(col("sig"), bIdx * rowsPerBand + 1, rowsPerBand)).as("bkey"))): _*))
+          hash(slice(col("sig"), bIdx * RowsPerBand + 1, RowsPerBand)).as("bkey"))): _*))
         .as("b"))
       .select(col("doc_id"), col("b.band"), col("b.bkey"))
     bucketPairs(banded, "d1", "d2")
@@ -196,8 +201,8 @@ object Dedup {
   /** SimHash near-dup pairs: 64-bit signature per doc (codegen'd
     * kernel), banded into 4×16-bit keys (pigeonhole
     * guarantee for hamming ≤ 3), verified with bit_count(xor) ≤
-    * maxHamming. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
+    * [[MaxHamming]]. */
+  def simhashPairs(docs: DataFrame): DataFrame = {
     // the signature rides in the id struct (doc_id first, so struct
     // order is doc_id order): no join back after the pair dedup
     val banded = simhashSigs(docs).select(struct(col("doc_id"), col("sig")).as("doc"),
@@ -207,7 +212,7 @@ object Dedup {
       .select(col("doc"), col("b.band"), col("b.bkey"))
     bucketPairs(banded, "d1", "d2")
       .withColumn("hamming", bit_count(col("d1.sig").bitwiseXOR(col("d2.sig"))))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
       .select(col("d1.doc_id").as("d1"), col("d2.doc_id").as("d2"), col("hamming"))
       .orderBy(col("d1"), col("d2"))
   }
@@ -225,7 +230,7 @@ object Dedup {
   /**
    * Embedding-cosine near-dup pairs, EXACT, with a distributed
    * block-pair plan (the published 1-bucket-theta shape): rows hash
-   * into B blocks; the tiny (bi ≤ bj) task table is broadcast; both
+   * into B = [[Blocks]] blocks; the tiny (bi ≤ bj) task table is broadcast; both
    * sides replicate ~B/2× and meet in a shuffle hash join on task id.
    * No BroadcastNestedLoopJoin, no full-corpus broadcast, bounded
    * per-task memory (2·n/B rows) — the round-1 plan broadcast the
@@ -238,13 +243,13 @@ object Dedup {
    * thresholds (≥0.8) use [[embedNearDupLsh]], the sub-quadratic
    * scale path (recall < 1 by design, pinned in PipelineSpec).
    */
-  def embedNearDup(emb: DataFrame, threshold: Double = 0.45, blocks: Int = 8): DataFrame = {
+  def embedNearDup(emb: DataFrame, threshold: Double = 0.45): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val tasks = (for { i <- 0 until blocks; j <- i until blocks }
-      yield (i * blocks + j, i, j)).toDF("task", "bi", "bj")
+    val tasks = (for { i <- 0 until Blocks; j <- i until Blocks }
+      yield (i * Blocks + j, i, j)).toDF("task", "bi", "bj")
     val blocked = emb.select(col("vec_id"), col("embedding"),
-      pmod(hash(col("vec_id")), lit(blocks)).as("blk"))
+      pmod(hash(col("vec_id")), lit(Blocks)).as("blk"))
     val a = blocked.join(broadcast(tasks), col("blk") === col("bi"))
       .select(col("task"), col("vec_id").as("id_a"), col("embedding").as("va"))
     val b = blocked.join(broadcast(tasks), col("blk") === col("bj"))
@@ -265,16 +270,10 @@ object Dedup {
   /** Approximate near-dup pairs via hyperplane-LSH candidate buckets
     * (Similarity.lshCandidates) + exact-cosine verify — the
     * sub-quadratic 100 TB path. Output ⊆ [[embedNearDup]]; recall
-    * depends on (nTables, nPlanes) vs threshold and is pinned
+    * depends on [[NearDupTables]] vs threshold and is pinned
     * empirically in PipelineSpec. */
-  def embedNearDupLsh(
-      emb: DataFrame,
-      threshold: Double = 0.45,
-      nTables: Int = 24,
-      nPlanes: Int = 4,
-      dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
-    bucketPairs(Similarity.lshCandidates(emb, nTables, nPlanes, dim, seed), "id_a", "id_b")
+  def embedNearDupLsh(emb: DataFrame, threshold: Double): DataFrame = {
+    bucketPairs(Similarity.lshCandidates(emb, NearDupTables), "id_a", "id_b")
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("vb")), Seq("id_b"))
       .filter(Kernels.cosineSim(col("va"), col("vb")) >= threshold)

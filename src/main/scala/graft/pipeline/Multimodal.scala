@@ -123,11 +123,11 @@ object Multimodal {
   /** Deterministic synthetic media corpus (seeded): REAL PNG payloads
     * for images, REAL WAV/PCM16 payloads for audio, REAL Motion-JPEG
     * AVI payloads for video. */
-  def synthesize(spark: SparkSession, n: Long, seed: Long = 42L): Dataset[MediaRecord] = {
+  def synthesize(spark: SparkSession, n: Long): Dataset[MediaRecord] = {
     implicit val enc = Encoders.product[MediaRecord]
     spark.range(n).mapPartitions { it =>
       it.map { i =>
-        val rng = new graft.gen.TokenGen.Rng(seed ^ (i * 0x9E3779B97F4A7C15L + 7))
+        val rng = new graft.gen.TokenGen.Rng(graft.gen.TokenGen.SEED ^ (i * 0x9E3779B97F4A7C15L + 7))
         val kind = Seq("image", "audio", "video")(rng.nextInt(3))
         kind match {
           case "image" =>

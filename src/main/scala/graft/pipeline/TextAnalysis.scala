@@ -92,15 +92,18 @@ object TextAnalysis {
   def winnowGrams(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), gramHashes(col("text")).as("hashes"))
 
+  /** Grams per winnowing window of [[fingerprint]]. */
+  private val WinnowWindow = 4
+
   /** Content fingerprints: md5 of normalized text (exact-dup key) and
     * a winnowing-style selected-hash list (k-gram rolling window,
-    * min-hash per window, distinct) for robust partial-overlap
-    * detection. */
-  def fingerprint(docs: DataFrame, window: Int = 4): DataFrame =
+    * min-hash per window of [[WinnowWindow]] grams, distinct) for
+    * robust partial-overlap detection. */
+  def fingerprint(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
       md5(lower(trim(col("text")))).as("md5_fp"),
-      Kernels.winnowSelect(gramHashes(col("text")), window)
+      Kernels.winnowSelect(gramHashes(col("text")), WinnowWindow)
         .as("winnow_fp"))
       .orderBy(col("doc_id"))
 

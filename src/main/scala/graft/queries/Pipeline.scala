@@ -24,13 +24,13 @@ object Pipeline {
     Dedup.exact(docs(spark, dir))
 
   def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.jaccardPairs(docs(spark, dir), n = 3, threshold = 0.2)
+    Dedup.jaccardPairs(docs(spark, dir), threshold = 0.2)
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLsh(docs(spark, dir), n = 3, threshold = 0.2)
+    Dedup.minhashLsh(docs(spark, dir), threshold = 0.2)
 
   def simhashPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairs(docs(spark, dir), maxHamming = 3)
+    Dedup.simhashPairs(docs(spark, dir))
 
   def embedNearDup(spark: SparkSession, dir: String): DataFrame =
     Dedup.embedNearDup(emb(spark, dir), threshold = 0.45)
@@ -38,19 +38,23 @@ object Pipeline {
   def embedNearDupLsh(spark: SparkSession, dir: String): DataFrame =
     Dedup.embedNearDupLsh(emb(spark, dir), threshold = 0.45)
 
+  /** The ANN queries' query set: the first ten vectors (shared with
+    * Verify's IVF probe export). */
+  def annQueries(emb: DataFrame): DataFrame = emb.filter(col("vec_id") < 10)
+
   def annTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    Similarity.bruteTopK(e, e.filter(col("vec_id") < 10), k = 5)
+    Similarity.bruteTopK(e, annQueries(e))
   }
 
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    Similarity.lshTopK(e, e.filter(col("vec_id") < 10), k = 5)
+    Similarity.lshTopK(e, annQueries(e))
   }
 
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), k = 5)
+    Similarity.ivfTopK(e, annQueries(e))
   }
 
   def tokenCounts(spark: SparkSession, dir: String): DataFrame =

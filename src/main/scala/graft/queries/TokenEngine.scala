@@ -10,10 +10,11 @@ import graft.model._
 /**
  * Token-domain engine queries — the north-star pipeline run in batch
  * form over the deterministically synthesized tokenized-sequence table
- * (FIXTURES §1; seed=42, no external data). These have no DuckDB
- * oracle (the table lives nowhere DuckDB can see) — correctness is
- * enforced by the straight-line Scala oracle in the test suite
- * (graft.OracleSpec) per SURVEY §5; the driver records rows>0.
+ * (FIXTURES §1; seed=42, no external data). Each has a DuckDB row in
+ * SparkEntry.oracleSql, which reads the token table and the other
+ * inputs Verify exports to `.oracle_tables/`; the array-valued forms
+ * the query rows flatten are pinned against the straight-line Scala
+ * oracle of the test suite (graft.ScalaOracle, SURVEY §5).
  *
  * Row counts scale with the sf dir so Bench exercises real volume:
  * sf0.001→2k docs, sf0.01→20k, sf0.1→200k.
@@ -216,13 +217,6 @@ object TokenEngine {
         max(col("n_tok")).as("max_tokens"))
       .orderBy(col("source"))
 
-  /** Details traversal in batch form (J1): a Path field extracts link
-    * keys; the child universe is the deterministic key→page function
-    * (TokenGen.childTokens); child blocks are nested per parent block
-    * under `Links_details` in (key, block) order. The child side is
-    * broadcast — the detail-page universe is far smaller than the
-    * parent block count (many parents share detail pages), which also
-    * removes hot-link-key join skew. */
   /** Per-source selector-tag histogram via the custom typed
     * `Aggregator` UDAF (SURVEY §2.10 — graft.functions.TagHistogram):
     * one constant-width buffer per source, partial-merged map-side,
@@ -236,14 +230,14 @@ object TokenEngine {
       .filter(col("n") > 0)
       .orderBy(col("source"), col("tag"))
 
-  /** The details-traversal parent/child specs (shared with Verify's
-    * child-universe export so the DuckDB oracle sees the same child
-    * docs). */
+  /** The details-traversal spec: its Links field carries the child
+    * spec (shared with Verify's child-universe export so the DuckDB
+    * oracle sees the same child docs). */
   val detailsParentSpec: ExtractionSpec = ExtractionSpec("with_details", Seq(
     FieldSpec("Names", selector = 3, types = Seq(ExtractorType.Text, ExtractorType.Count)),
-    FieldSpec("Links", selector = 5, types = Seq(ExtractorType.Path))))
-  val detailsChildSpec: ExtractionSpec = ExtractionSpec("detail", Seq(
-    FieldSpec("Phones", selector = 6, types = Seq(ExtractorType.Text, ExtractorType.Count))))
+    FieldSpec("Links", selector = 5, types = Seq(ExtractorType.Path),
+      details = Some(ExtractionSpec("detail", Seq(
+        FieldSpec("Phones", selector = 6, types = Seq(ExtractorType.Text, ExtractorType.Count))))))))
 
   /** Child-doc universe reachable from the flagship details spec:
     * distinct extracted Path keys resolved through the deterministic
@@ -255,6 +249,13 @@ object TokenEngine {
     graft.gen.TokenGen.childDocs(spark, keys)
   }
 
+  /** Details traversal in batch form (J1): a Path field extracts link
+    * keys; the child universe is the deterministic key→page function
+    * (TokenGen.childTokens); child blocks are nested per parent block
+    * under `Links_details` in (key, block) order. The child side is
+    * broadcast — the detail-page universe is far smaller than the
+    * parent block count (many parents share detail pages), which also
+    * removes hot-link-key join skew. */
   def detailsJoin(spark: SparkSession, dir: String): DataFrame = {
     // declarative nesting: the Links field carries the child spec and
     // the compiler recurses (reference scrape/scrape.go:279-292) — no
@@ -262,12 +263,8 @@ object TokenEngine {
     // is genuinely small; at sf>=0.1 the link universe is ~1 child doc
     // per parent doc, so the nested side is fact-sized -> sort-merge
     // join on link_key.
-    val spec = ExtractionSpec("with_details", Seq(
-      FieldSpec("Names", selector = 3, types = Seq(ExtractorType.Text, ExtractorType.Count)),
-      FieldSpec("Links", selector = 5, types = Seq(ExtractorType.Path),
-        details = Some(detailsChildSpec))))
     ExtractCompiler
-      .compileWithDetails(docsFor(spark, dir), spec,
+      .compileWithDetails(docsFor(spark, dir), detailsParentSpec,
         (s, keys) => graft.gen.TokenGen.childDocs(s, keys),
         broadcastChildren = scaleOf(dir) < 0.1)
       .select(col("doc_id"), col("block_idx"),

@@ -53,30 +53,19 @@ object RecordEncoder extends Serializable {
     case (other, _) => "\"" + esc(String.valueOf(other)) + "\""
   }
 
-  /** Array values keep full list form here (no collapse) — used for
-    * the verbatim-tokens golden where token-array equality is the
-    * invariant. */
-  private def jsonValueNoCollapse(v: Any, dt: DataType): String = (v, dt) match {
-    case (seq: scala.collection.Seq[_], ArrayType(et, _)) =>
-      seq.map(jsonValueNoCollapse(_, et)).mkString("[", ",", "]")
-    case _ => jsonValue(v, dt)
-  }
-
-  private def jsonObject(
-      row: Row, fields: Array[(StructField, Int)], collapse: Boolean): String =
+  private def jsonObject(row: Row, fields: Array[(StructField, Int)]): String =
     fields.flatMap { case (f, i) =>
       val v = row.get(i)
       if (v == null) None // nil-omission
-      else Some("\"" + esc(f.name) + "\":" +
-        (if (collapse) jsonValue(v, f.dataType) else jsonValueNoCollapse(v, f.dataType)))
+      else Some("\"" + esc(f.name) + "\":" + jsonValue(v, f.dataType))
     }.mkString("{", ",", "}")
 
   /** One JSON object per row; null fields omitted; single-element
     * arrays collapsed to scalars. */
-  def toJsonRecords(df: DataFrame, collapse: Boolean = true): Dataset[String] = {
+  def toJsonRecords(df: DataFrame): Dataset[String] = {
     val fields = df.schema.fields.zipWithIndex
     implicit val enc = org.apache.spark.sql.Encoders.STRING
-    df.map(row => jsonObject(row, fields, collapse))
+    df.map(row => jsonObject(row, fields))
   }
 
   /** Group consecutive rows of one page after a hash exchange on the
@@ -118,13 +107,11 @@ object RecordEncoder extends Serializable {
     * The page/order columns are grouping keys only and are not emitted
     * — the reference's grouping is positional (`[`…`],[`…`]` page
     * delimiters, encoders.go:80-118). */
-  def toJsonPages(
-      df: DataFrame, pageCol: String, orderCol: String,
-      collapse: Boolean = true): Dataset[String] = {
+  def toJsonPages(df: DataFrame, pageCol: String, orderCol: String): Dataset[String] = {
     val fields = df.schema.fields.zipWithIndex
       .filter { case (f, _) => f.name != pageCol && f.name != orderCol }
     groupedPages(df, pageCol, orderCol) { rows =>
-      rows.map(jsonObject(_, fields, collapse)).mkString("[", ",", "]")
+      rows.map(jsonObject(_, fields)).mkString("[", ",", "]")
     }
   }
 

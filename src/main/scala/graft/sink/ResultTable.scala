@@ -1,7 +1,7 @@
 package graft.sink
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}

@@ -75,17 +75,13 @@ object DeadLetter {
       checkpointDir: String,
       quarantineCheckpointDir: String,
       queryId: String,
-      watermarkDelay: String = "10 minutes",
-      sessionGapMs: Long = 30000L,
-      trigger: Trigger = Trigger.AvailableNow()): (StreamingQuery, StreamingQuery) = {
+      watermarkDelay: String,
+      sessionGapMs: Long,
+      trigger: Trigger): (StreamingQuery, StreamingQuery) = {
     val main = StreamJob.run(clean(fragments), spec, table, checkpointDir,
       queryId, watermarkDelay, sessionGapMs, trigger)
-    val dlq = StreamJob.start(fragments.sparkSession, poisoned(fragments).writeStream
-      .queryName(s"$queryId-quarantine")
-      .outputMode("append")
-      .option("checkpointLocation", quarantineCheckpointDir)
-      .trigger(trigger)
-      .foreachBatch(quarantine.appendBatch(s"$queryId-quarantine") _))
+    val dlq = StreamJob.startSink(poisoned(fragments), quarantine, quarantineCheckpointDir,
+      s"$queryId-quarantine", trigger)
     (main, dlq)
   }
 }

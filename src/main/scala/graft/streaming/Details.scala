@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -114,8 +114,8 @@ object Details {
   def joinStream(
       linkRows: DataFrame,
       children: DataFrame,
-      watermarkDelay: String = "10 minutes",
-      bandSeconds: Long = 600L): DataFrame = {
+      watermarkDelay: String,
+      bandSeconds: Long): DataFrame = {
     val p = linkRows.withWatermark("p_time", watermarkDelay)
     val c = children.withWatermark("c_time", watermarkDelay)
     p.join(c,

@@ -42,6 +42,11 @@ final case class PaceState(lastScheduledMs: Long)
  */
 object Pacing {
 
+  /** Delay of a source without its own (the reference's FetchDelay
+    * default), and the input watermark delay. */
+  private val DelayMs = 500L
+  private val WatermarkDelay = "10 minutes"
+
   /** The pure pacing fold over ONE source's rows, ms domain:
     * `sched_i = max(et_i, sched_{i-1} + delay)` (Lindley recurrence).
     * `sorted` must already be ordered by (event_ms, doc_id); `last0`
@@ -64,11 +69,11 @@ object Pacing {
     (out, last)
   }
 
-  def update(delayMs: Long, perSourceDelayMs: Map[String, Long])(
+  def update(perSourceDelayMs: Map[String, Long])(
       source: String,
       rows: Iterator[(String, String, Timestamp)],
       state: GroupState[PaceState]): Iterator[PacedRow] = {
-    val delay = perSourceDelayMs.getOrElse(source, delayMs)
+    val delay = perSourceDelayMs.getOrElse(source, DelayMs)
     // in-memory bound note: one source's whole micro-batch slice is
     // buffered and sorted here — per-source pacing is inherently
     // serial (the reference's same-domain sleep) and state is O(1),
@@ -91,7 +96,7 @@ object Pacing {
   /** Pace `(doc_id, source, event_time)` rows per source key.
     * `perSourceDelayMs` overrides the default per source — the robots
     * Crawl-delay directive channel ([[RobotsGate.crawlDelays]]);
-    * absent sources use `delayMs` (the reference's FetchDelay
+    * absent sources use `DelayMs` (the reference's FetchDelay
     * fallback, scrape/scrape.go:702-709).
     *
     * Fidelity note (ADVICE r3): the reference RETRIEVES Crawl-delay
@@ -100,15 +105,13 @@ object Pacing {
     * it here is an intentional, more-polite EXTENSION, not parity. */
   def pace(
       rows: Dataset[(String, String, Timestamp)],
-      delayMs: Long = 500L,
-      watermarkDelay: String = "10 minutes",
       perSourceDelayMs: Map[String, Long] = Map.empty): Dataset[PacedRow] = {
     implicit val outEnc = Encoders.product[PacedRow]
     implicit val stateEnc = Encoders.product[PaceState]
     rows
-      .withWatermark("_3", watermarkDelay)
+      .withWatermark("_3", WatermarkDelay)
       .groupByKey(_._2)(Encoders.STRING)
       .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(update(delayMs, perSourceDelayMs))
+        OutputMode.Append, GroupStateTimeout.NoTimeout)(update(perSourceDelayMs))
   }
 }

@@ -44,9 +44,9 @@ import graft.model.TokenCodec
  */
 object Paginate {
 
-  /** Page-key column for one (start, page) pair: `start?param=idx`. */
-  private def pageKey(start: Column, param: String, idx: Column): Column =
-    concat(start, lit(s"?$param="), idx.cast("string"))
+  /** Page-key column for one (start, page) pair: `start?p=idx`. */
+  private def pageKey(start: Column, idx: Column): Column =
+    concat(start, lit("?p="), idx.cast("string"))
 
   /**
    * Degenerate-but-common ByQueryParam case: when the key sequence
@@ -58,15 +58,11 @@ object Paginate {
    * positive (an unbounded static expansion is meaningless; unbounded
    * CONTENT-DRIVEN chains are [[crawl]] with maxPages=0).
    */
-  def byQueryParam(
-      starts: DataFrame,
-      keyCol: String,
-      param: String = "p",
-      maxPages: Int = 1): DataFrame = {
+  def byQueryParam(starts: DataFrame, keyCol: String, maxPages: Int): DataFrame = {
     require(maxPages > 0, "byQueryParam needs a positive page bound")
     starts.select(col("*"),
       posexplode(transform(sequence(lit(0), lit(maxPages - 1)),
-        i => pageKey(col(keyCol), param, i))).as(Seq("page_idx", "page_key")))
+        i => pageKey(col(keyCol), i))).as(Seq("page_idx", "page_key")))
   }
 
   /** Next key by incrementing integer query param `param` (reference
@@ -120,7 +116,7 @@ object Paginate {
       origins: DataFrame,
       resolve: (SparkSession, Dataset[String]) => DataFrame,
       nextKey: (Column, Column) => Column,
-      maxPages: Int = 1): DataFrame = {
+      maxPages: Int): DataFrame = {
     val spark = origins.sparkSession
     import spark.implicits._
 

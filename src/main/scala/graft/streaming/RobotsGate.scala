@@ -76,11 +76,7 @@ object RobotsGate {
    * on batch AND streaming frames (broadcast joins are stateless, so
    * the gate adds no state store and no watermark interaction).
    */
-  def gate(
-      frontier: DataFrame,
-      rules: DataFrame,
-      sourceCol: String = "source",
-      pathCol: String = "doc_id"): DataFrame = {
+  def gate(frontier: DataFrame, rules: DataFrame): DataFrame = {
     // one rule row per source is the join's correctness precondition:
     // a duplicated rules row would silently duplicate every allowed
     // frontier row through the left join (ADVICE r3) — enforce it
@@ -98,8 +94,8 @@ object RobotsGate {
       .select(col("__rsource"), col("__rule.status").as("__status"),
         col("__rule.allows").as("__allows"), col("__rule.disallows").as("__disallows"))
     frontier
-      .join(broadcast(r), frontier(sourceCol) === col("__rsource"), "left")
-      .filter(verdict(frontier(pathCol)))
+      .join(broadcast(r), frontier("source") === col("__rsource"), "left")
+      .filter(verdict(frontier("doc_id")))
       .drop("__rsource", "__status", "__allows", "__disallows")
   }
 }

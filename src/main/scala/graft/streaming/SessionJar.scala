@@ -105,12 +105,12 @@ object SessionJar {
     }
   }
 
-  /** The operator: session-hydrated events, watermark-bounded state. */
+  /** The operator: session-hydrated events, watermark-bounded state.
+    * The reference's default TTL is ITEM_EXPIRE_IN = 86400 s. */
   def hydrate(
       events: Dataset[CookieEvent],
-      ttlMs: Long = 86400000L, // reference default ITEM_EXPIRE_IN=86400s
-      watermarkDelay: String = "10 minutes"): Dataset[HydratedEvent] = {
-    implicit val inEnc = Encoders.product[CookieEvent]
+      ttlMs: Long,
+      watermarkDelay: String): Dataset[HydratedEvent] = {
     implicit val outEnc = Encoders.product[HydratedEvent]
     implicit val stEnc = Encoders.product[JarState]
     events

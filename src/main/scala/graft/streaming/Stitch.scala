@@ -185,7 +185,6 @@ object Stitch {
       gapMs: Long = 30000L,
       fused: Boolean = true): Dataset[AssembledDoc] = {
     require(fused, "fused = false is not supported: dedup and late-drop run only inside the stitcher")
-    implicit val fragEnc = Encoders.product[Fragment]
     implicit val docEnc = Encoders.product[AssembledDoc]
     implicit val stateEnc = Encoders.product[StitchState]
     fragments.withWatermark("event_time", watermarkDelay)

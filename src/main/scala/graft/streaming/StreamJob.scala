@@ -47,18 +47,23 @@ object StreamJob {
       table: ResultTable,
       checkpointDir: String,
       queryId: String,
-      watermarkDelay: String = "10 minutes",
-      sessionGapMs: Long = 30000L,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      watermarkDelay: String,
+      sessionGapMs: Long,
+      trigger: Trigger): StreamingQuery = {
     val assembled = Stitch.stitch(limitPages(fragments, spec), watermarkDelay, sessionGapMs)
-    val extracted = extractStage(assembled, spec)
-    start(extracted.sparkSession, extracted.writeStream
+    startSink(extractStage(assembled, spec), table, checkpointDir, queryId, trigger)
+  }
+
+  /** Start `df` as append stream `queryId` whose micro-batches land in
+    * `table`, each exactly once (the sink of every engine stream). */
+  private[streaming] def startSink(df: DataFrame, table: ResultTable, checkpointDir: String,
+      queryId: String, trigger: Trigger): StreamingQuery =
+    start(df.sparkSession, df.writeStream
       .queryName(queryId)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch(table.appendBatch(queryId) _))
-  }
 
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
@@ -97,7 +102,7 @@ object StreamJob {
 
   /** File-based fragment source (the in-sandbox stand-in for the
     * Iceberg streaming scan): parquet files appearing under `dir`. */
-  def fileSource(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): Dataset[Fragment] = {
+  def fileSource(spark: SparkSession, dir: String, maxFilesPerTrigger: Int): Dataset[Fragment] = {
     import spark.implicits._
     spark.readStream
       .schema(spark.createDataset(Seq.empty[Fragment]).schema)
@@ -107,23 +112,10 @@ object StreamJob {
   }
 
   /** Batch oracle for the same pipeline: what the sink must contain
-    * for a given set of fragments once every session has closed.
-    * Late fragments (event_time older than `maxEvent - watermark`) are
-    * excluded exactly as the streaming watermark would drop them,
-    * assuming source order = event-time order (true for our generator
-    * feed). */
-  def batchOracle(
-      spark: SparkSession,
-      fragments: Dataset[Fragment],
-      spec: ExtractionSpec,
-      watermarkDelay: Option[Long] = None): DataFrame = {
+    * for a given set of on-time fragments once every session has
+    * closed (the caller leaves out the fragments the watermark drops). */
+  def batchOracle(spark: SparkSession, fragments: Dataset[Fragment], spec: ExtractionSpec): DataFrame = {
     val limited = limitPages(fragments, spec)
-    val pruned = watermarkDelay match {
-      case Some(delayMs) =>
-        val maxEvent = limited.agg(max(col("event_time"))).head().getTimestamp(0)
-        limited.filter(col("event_time") >= lit(new java.sql.Timestamp(maxEvent.getTime - delayMs)))
-      case None => limited
-    }
     // first-arrival wins, deterministically: the stitcher keeps the
     // earliest (event_time, frag_idx) per (doc_id, page_idx); a bare
     // dropDuplicates keeps an arbitrary row, and event_time flows into
@@ -132,7 +124,7 @@ object StreamJob {
     val firstArrival = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"), col("page_idx"))
       .orderBy(col("event_time"), col("frag_idx"))
-    val docs = pruned.toDF()
+    val docs = limited.toDF()
       .withColumn("__rn", row_number().over(firstArrival))
       .filter(col("__rn") === 1).drop("__rn")
       .groupBy(col("doc_id"), col("source"))

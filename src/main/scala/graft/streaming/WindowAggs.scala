@@ -30,10 +30,9 @@ import org.apache.spark.sql.functions._
 object WindowAggs {
 
   /** Tumbling per-source counts: one row per (window, source). */
-  def tumbling(docs: DataFrame, every: String = "10 seconds",
-               timeCol: String = "event_time"): DataFrame =
+  def tumbling(docs: DataFrame, every: String): DataFrame =
     docs
-      .groupBy(window(col(timeCol), every).as("w"), col("source"))
+      .groupBy(window(col("event_time"), every).as("w"), col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("total_tokens"))

@@ -41,15 +41,14 @@ final case class Kernel(
 
   def node(args: Seq[Expression]): Expression =
     if (inputs.contains(Kernel.Vector)) FloatOrDouble(this, args)
-    else invoke(args)
+    else invoke(args, argTypes)
 
   def apply(args: Column*): Column =
     ExpressionUtils.column(node(args.map(ExpressionUtils.expression)))
 
   private[graft] def argTypes: Seq[AbstractDataType] = inputs ++ ints.map(_ => IntegerType)
 
-  private[graft] def invoke(args: Seq[Expression],
-      types: Seq[AbstractDataType] = argTypes): Expression =
+  private[graft] def invoke(args: Seq[Expression], types: Seq[AbstractDataType]): Expression =
     StaticInvoke(obj.getClass, returns, method, args, inputTypes = types, returnNullable = false)
 }
 

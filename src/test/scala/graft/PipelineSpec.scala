@@ -38,7 +38,7 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("jaccard pairs find planted near-dups and nothing else") {
-    val pairs = Dedup.jaccardPairs(plantedDocs, n = 3, threshold = 0.5)
+    val pairs = Dedup.jaccardPairs(plantedDocs, threshold = 0.5)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 5L)) && pairs.contains((2L, 5L)))
     assert(pairs.contains((1L, 3L)), "2-edit doc still above 0.5 trigram jaccard")
@@ -50,10 +50,10 @@ class PipelineSpec extends SparkSuite {
     // on the fixed seed they must all surface; borderline pairs
     // (J~0.6, miss prob ~0.2) are allowed to be missed (that's the
     // LSH recall trade), but anything EMITTED must verify >= 0.5.
-    val exact = Dedup.jaccardPairs(plantedDocs, n = 3, threshold = 0.5)
+    val exact = Dedup.jaccardPairs(plantedDocs, threshold = 0.5)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     val highJ = Set((1L, 2L), (1L, 5L), (2L, 5L)) // exact copy + 1-word edit
-    val lsh = Dedup.minhashLsh(plantedDocs, n = 3, threshold = 0.5)
+    val lsh = Dedup.minhashLsh(plantedDocs, threshold = 0.5)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     assert(highJ.subsetOf(lsh), s"missed high-J pairs: ${highJ -- lsh}")
     assert(lsh.subsetOf(exact), "verification stage must kill sub-threshold candidates")
@@ -68,7 +68,7 @@ class PipelineSpec extends SparkSuite {
     // executedPlan is the traversable tree WITH Exchange nodes inserted
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val plan =
-      try Dedup.minhashLsh(plantedDocs, n = 3, threshold = 0.5)
+      try Dedup.minhashLsh(plantedDocs, threshold = 0.5)
         .queryExecution.executedPlan
       finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     val exchanges = plan.collect {
@@ -125,12 +125,12 @@ class PipelineSpec extends SparkSuite {
         (2L, s"$boiler alpha beta gamma epsilon")) ++
         Seq.tabulate(4)(i => (3L + i, s"$boiler unique$i only$i words$i"))
       ).toDF("doc_id", "text")
-    val capped = Dedup.jaccardPairs(docs, n = 3, threshold = 0.1, maxDf = 3)
+    val capped = Dedup.jaccardPairs(docs, threshold = 0.1, maxDf = 3)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     assert(capped.contains((1L, 2L)), "distinctive overlap must survive the cap")
     assert(!capped.exists(p => p._1 >= 3L || p._2 >= 3L),
       s"boilerplate-only pairs must be suppressed, got $capped")
-    val uncapped = Dedup.jaccardPairs(docs, n = 3, threshold = 0.1, maxDf = 1000)
+    val uncapped = Dedup.jaccardPairs(docs, threshold = 0.1, maxDf = 1000)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     assert(uncapped.exists(p => p._1 >= 3L || p._2 >= 3L),
       "sanity: without the cap the hot shingle does pair boilerplate docs")
@@ -153,7 +153,7 @@ class PipelineSpec extends SparkSuite {
     val long3 = (0 until 200).map(i => s"other$i").mkString(" ")
     val docs = Seq((1L, long1), (2L, long2), (3L, long3), (4L, long1))
       .toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 3)
+    val pairs = Dedup.simhashPairs(docs)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 4L)), "identical docs at hamming 0")
     assert(pairs.contains((1L, 2L)), "1-word edit on 200 words within hamming<=3")
@@ -199,9 +199,9 @@ class PipelineSpec extends SparkSuite {
   test("LSH ANN recall >= 0.6 vs brute force on the fixed embeddings table") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = e.filter($"vec_id" < 10)
-    val brute = Similarity.bruteTopK(e, q, k = 5)
+    val brute = Similarity.bruteTopK(e, q)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(e, q, k = 5)
+    val approx = Similarity.lshTopK(e, q)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recall = (brute & approx).size.toDouble / brute.size
     info(f"LSH ANN recall = $recall%.3f (${approx.size} approx rows)")
@@ -217,9 +217,9 @@ class PipelineSpec extends SparkSuite {
     val c2 = Similarity.ivfCentroids(e)
     assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq, "centroids must be deterministic")
     val q = e.filter($"vec_id" < 10)
-    val brute = Similarity.bruteTopK(e, q, k = 5)
+    val brute = Similarity.bruteTopK(e, q)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(e, q, k = 5)
+    val ivf = Similarity.ivfTopK(e, q)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val recall = (brute & ivf).size.toDouble / brute.size
     info(f"IVF ANN recall = $recall%.3f (${ivf.size} rows, 4/16 cells probed)")

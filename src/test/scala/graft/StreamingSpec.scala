@@ -131,7 +131,7 @@ class StreamingSpec extends SparkSuite {
 
   test("politeness pacing: deterministic per-source schedule with min spacing") {
     val mem = MemoryStream[(String, String, Timestamp)]
-    val out = Pacing.pace(mem.toDS(), delayMs = 500L)
+    val out = Pacing.pace(mem.toDS())
     val q = out.writeStream.format("memory").queryName("pace_t").outputMode("append").start()
     try {
       // burst of 4 rows on one source at the same event time + 1 on another
@@ -163,7 +163,7 @@ class StreamingSpec extends SparkSuite {
       RobotsGate.RobotsRules("nodirective", 200, Nil, Nil))) // 0 -> absent
     assert(delays == Map("slow" -> 2000L))
     val mem = MemoryStream[(String, String, Timestamp)]
-    val out = Pacing.pace(mem.toDS(), delayMs = 500L, perSourceDelayMs = delays)
+    val out = Pacing.pace(mem.toDS(), perSourceDelayMs = delays)
     val q = out.writeStream.format("memory").queryName("pace_cd")
       .outputMode("append").start()
     try {
@@ -384,7 +384,7 @@ class StreamingSpec extends SparkSuite {
 
   test("byQueryParam pagination expands start keys into bounded page-key sequences") {
     val starts = Seq(("a", "job1"), ("b", "job2")).toDF("base", "job")
-    val out = Paginate.byQueryParam(starts, keyCol = "base", param = "p", maxPages = 3)
+    val out = Paginate.byQueryParam(starts, keyCol = "base", maxPages = 3)
       .orderBy("base", "page_idx").collect()
     assert(out.length == 6)
     assert(out.map(_.getAs[String]("page_key")).toSeq ==
