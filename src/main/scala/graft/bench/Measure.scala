@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Query
 import graft.gen.{Fragment, TokenGen}
 import graft.queries.TokenEngine
 import graft.sink.ResultTable
@@ -169,13 +170,11 @@ object Measure {
     * Dataset count prunes unused columns and skips the kernels. */
   def timeQueries(spark: SparkSession, queries: Seq[(String, (SparkSession, String) => DataFrame)],
       sfDir: String, reps: Int): QueryTimes = {
-    def once(fn: (SparkSession, String) => DataFrame): Double = {
+    // cache lifecycle is harness bookkeeping, outside the timed window
+    def once(fn: (SparkSession, String) => DataFrame): Double = Query.run(spark) {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count(); (System.nanoTime() - t0) / 1e9 }
-      finally { // cache lifecycle is harness bookkeeping, outside the timed window
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      }
+      fn(spark, sfDir).queryExecution.toRdd.count()
+      (System.nanoTime() - t0) / 1e9
     }
     val runs = queries.map { case (name, fn) =>
       name -> (try Right((1 to reps).map(_ => once(fn)).min)

@@ -170,7 +170,7 @@ object ExtractCompiler {
       docs: DataFrame,
       spec: ExtractionSpec,
       resolve: (org.apache.spark.sql.SparkSession, org.apache.spark.sql.Dataset[String]) => DataFrame,
-      broadcastChildren: Boolean = true): DataFrame = {
+      broadcastChildren: Boolean): DataFrame = {
     val compiled = compile(docs, spec)
     val detailFields = spec.fields.filter(_.details.nonEmpty)
     // A details level consumes the extracted parents from THREE plan

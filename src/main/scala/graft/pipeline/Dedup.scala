@@ -71,7 +71,7 @@ object Dedup {
     * subtrees of ONE job — a lazy cache() loses the race (each subtree
     * scan starts before any fills the cache) and the chain evaluates
     * per subtree. One cheap narrow pass up front makes every reuse a
-    * cache hit. Caller (Verify/Bench) clears caches per query. */
+    * cache hit. Query.run clears caches after each query. */
   private def materialized(df: DataFrame): DataFrame = {
     val cached = df.cache()
     cached.count()

@@ -8,10 +8,10 @@ import graft.pipeline._
 /**
  * Training-data pipeline queries over the driver's `documents` and
  * `embeddings` tables (+ the deterministic synthetic media corpus).
- * SQL-expressible ones carry DuckDB oracles in SparkEntry.oracleSql;
- * the LSH/winnow/multimodal ones are rows-only there and pinned by
- * PipelineSpec (planted-duplicate corpora, recall floors, schema
- * round-trips).
+ * Each has a DuckDB oracle in its SparkEntry.all record; the LSH,
+ * winnow and multimodal ones read tables Verify exports (buckets,
+ * gram hashes, media). PipelineSpec also pins them (planted-duplicate
+ * corpora, recall floors, schema round-trips).
  */
 object Pipeline {
 
@@ -73,7 +73,7 @@ object Pipeline {
     * as (count, md5-of-joined-list) — scalar images of the array
     * (driver compare can't sort array cells); PipelineSpec pins the
     * raw array semantics. DuckDB oracle redoes the winnowing from the
-    * exported gram-hash table (SparkEntry.oracleSql). n_winnow is
+    * exported gram-hash table (its SparkEntry.all record). n_winnow is
     * BIGINT for physical-width parity with DuckDB len(). */
   def fingerprintWinnow(spark: SparkSession, dir: String): DataFrame =
     TextAnalysis.fingerprint(docs(spark, dir))

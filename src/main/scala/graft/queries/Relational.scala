@@ -6,8 +6,8 @@ import org.apache.spark.sql.expressions.Window
 
 /**
  * Relational operator coverage (SURVEY §2.4-§2.8 recasts) over the
- * driver's TPC-H-ish tables, each with a DuckDB oracle in
- * [[graft.SparkEntry.oracleSql]].
+ * driver's TPC-H-ish tables, each with a DuckDB oracle in its
+ * [[graft.SparkEntry.all]] record.
  *
  * Scale notes: every query here is declarative DataFrame code —
  * Catalyst pushes filters/projections into the parquet scan, AQE
@@ -30,7 +30,7 @@ object Relational {
     * is dtype-sensitive and DuckDB's pandas path coerces DECIMAL to
     * float64 while Spark's parquet yields Decimal objects — identical
     * values, unequal hashes, at ANY declared precision. BIGINT round-
-    * trips identically on both sides. Each oracleSql twin mirrors the
+    * trips identically on both sides. Each oracle SQL twin mirrors the
     * same `CAST(x * 10^scale AS BIGINT)`. */
   private def cents(c: Column, scale: Int): Column =
     // integer power (ADVICE r3): math.pow goes through double and is
@@ -200,8 +200,8 @@ object Relational {
       .orderBy(col("user_id"), col("sess_start"))
 
   /** Exact distinct counts (SURVEY §2.5 A5 — frontier dedup statistics,
-    * exact path; the approximate path is approx_count_distinct, tested
-    * rows-only since HLL outputs are engine-specific). */
+    * exact path; the approximate path is [[qApproxDistinct]], checked
+    * by its tolerance band since HLL outputs are engine-specific). */
   def qDistinct(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "events")
       .groupBy(col("event_type"))

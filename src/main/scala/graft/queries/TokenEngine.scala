@@ -10,11 +10,12 @@ import graft.model._
 /**
  * Token-domain engine queries — the north-star pipeline run in batch
  * form over the deterministically synthesized tokenized-sequence table
- * (FIXTURES §1; seed=42, no external data). Each has a DuckDB row in
- * SparkEntry.oracleSql, which reads the token table and the other
- * inputs Verify exports to `.oracle_tables/`; the array-valued forms
- * the query rows flatten are pinned against the straight-line Scala
- * oracle of the test suite (graft.ScalaOracle, SURVEY §5).
+ * (FIXTURES §1; seed=42, no external data). Each has a DuckDB oracle
+ * in its SparkEntry.all record, which reads the token table and the
+ * other inputs that record exports to `.oracle_tables/`; the
+ * array-valued forms the query rows flatten are pinned against the
+ * straight-line Scala oracle of the test suite (graft.ScalaOracle,
+ * SURVEY §5).
  *
  * Row counts scale with the sf dir so Bench exercises real volume:
  * sf0.001→2k docs, sf0.01→20k, sf0.1→200k.

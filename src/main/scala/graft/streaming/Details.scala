@@ -77,7 +77,7 @@ object Details {
       parentBlocks: DataFrame,
       field: String,
       childBlocks: DataFrame,
-      broadcastChildren: Boolean = false): DataFrame = {
+      broadcastChildren: Boolean): DataFrame = {
     val structCols = childBlocks.columns.filterNot(Set("doc_id", "source", "n_tok"))
     val childRaw = childBlocks.select(col("doc_id").as("link_key"),
       struct(structCols.map(col).toSeq: _*).as("__cb"))

@@ -56,7 +56,7 @@ class DetailsSpec extends SparkSuite {
   test("path field is a join key only: not emitted as a user column (scrape.go:569-571)") {
     val p = ExtractCompiler.compile(parents, parentSpec)
     val c = ExtractCompiler.compile(children, childSpec)
-    val out = Details.joinBatch(p, "Links", c)
+    val out = Details.joinBatch(p, "Links", c, broadcastChildren = false)
     assert(!out.columns.exists(_.startsWith("__path_")))
     assert(out.columns.contains("Links_details") && out.columns.contains("Names_text"))
   }
@@ -93,7 +93,7 @@ class DetailsSpec extends SparkSuite {
 
     val out = ExtractCompiler.compileWithDetails(
       Seq(("p1", Array(2, 3, 100, 1, 5, 200, 1))).toDF("doc_id", "tokens"),
-      spec, resolve _).collect()
+      spec, resolve _, broadcastChildren = true).collect()
     assert(out.length == 1)
     val row = out.head
     assert(!row.schema.fieldNames.exists(_.startsWith("__path_")),
