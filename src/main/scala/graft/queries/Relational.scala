@@ -159,10 +159,9 @@ object Relational {
         length(col("p_name")).cast("int").as("name_len"))
       .orderBy(col("p_partkey"))
 
-  /** Tumbling event-time window (SURVEY §2.6 W4 / §2.5 A4, batch form —
-    * identical plan to WindowAggs.tumblingStream minus the watermark).
-    * Window bounds exported as epoch millis so the DuckDB oracle
-    * compares integers, not timezone-bound timestamps. */
+  /** Tumbling event-time window (SURVEY §2.6 W4 / §2.5 A4). Window
+    * bounds exported as epoch millis so the DuckDB oracle compares
+    * integers, not timezone-bound timestamps. */
   def qTumbling(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "events")
       .withColumn("ts", col("ts").cast("timestamp")) // parquet NTZ -> UTC session time

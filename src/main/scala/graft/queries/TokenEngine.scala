@@ -355,17 +355,15 @@ object TokenEngine {
         pmod(xxhash64(col("doc_id")), lit(86400000L))).as("event_ms"),
       ((substring(col("source"), -1, 1).cast("long") % 5 + 1) * 100).as("delay_ms"))
 
-  /** §2.9 politeness pacing as a DuckDB-checked driver row — the batch
-    * image of the streaming pacer (reference scrape/scrape.go:699-718):
-    * per-source ordered fold `sched = max(event, prev_sched + delay)`,
-    * computed by the SAME fold the streaming operator runs
-    * (graft.streaming.Pacing.foldSchedule — the determinism recast of
-    * the reference's wall-clock sleep). The oracle replays the
+  /** §2.9 politeness pacing as a DuckDB-checked driver row (reference
+    * scrape/scrape.go:699-718): per-source ordered fold
+    * `sched = max(event, prev_sched + delay)`, computed by
+    * graft.streaming.Pacing.foldSchedule — the determinism recast of
+    * the reference's wall-clock sleep. The oracle replays the
     * recurrence via its Lindley closed form,
     * `sched_i = i·delay + running_max(et_j − j·delay)`, a genuinely
-    * independent second derivation. Plan: ONE shuffle on source (the
-    * streaming operator's own partitioning), per-group sort+fold is
-    * O(rows of that source). */
+    * independent second derivation. Plan: ONE shuffle on source,
+    * per-group sort+fold is O(rows of that source). */
   def pacingSchedule(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     pacingRows(spark, dir)
@@ -455,17 +453,15 @@ object TokenEngine {
   }
 
   /** S4 cookie/session continuity as a DuckDB-checked driver row — the
-    * batch image of the session jar (reference fetch/service.go:36-106
+    * session jar (reference fetch/service.go:36-106
     * hydrate→fetch→persist; storage TTL diskv.go:49-81): each event
     * emitted with a digest of the jar AS HYDRATED before its own
-    * Set-Cookie merge, computed by the SAME fold the streaming
-    * operator runs (SessionJar.foldEvents: event-time order, last-wins
-    * per cookie name, first-insertion jar order, TTL lapse between
-    * events). The oracle re-derives the fold independently: TTL
+    * Set-Cookie merge, computed by SessionJar.foldEvents (event-time
+    * order, last-wins per cookie name, first-insertion jar order, TTL
+    * lapse between events). The oracle re-derives the fold independently: TTL
     * segments via LAG + running sum, per-event jar via a correlated
     * prefix aggregation (arg_max per name, MIN(seq) insertion order).
-    * Plan: ONE shuffle on user_token — the streaming operator's own
-    * partitioning. */
+    * Plan: ONE shuffle on user_token. */
   def sessionJarFold(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     jarEvents(spark, dir)
@@ -532,11 +528,12 @@ object TokenEngine {
   }
 
   /** §2.9 dead-letter taxonomy as a DuckDB-checked driver row (round-4
-    * verdict #2): the batch image of [[graft.streaming.DeadLetter]]'s
-    * status classification over a deterministically poisoned input —
-    * per-status row counts, token totals, and an ordered digest of
-    * each status class's rows (so a row routed to the wrong side of
-    * the quarantine split cannot hash-match). The oracle re-derives
+    * verdict #2): [[graft.streaming.DeadLetter]]'s status
+    * classification — the same rules the stream's stitcher screens
+    * with — over a deterministically poisoned input: per-status row
+    * counts, token totals, and an ordered digest of each status
+    * class's rows (so a row given the wrong status cannot
+    * hash-match). The oracle re-derives
     * every row's status independently from the exported rows. */
   def deadLetterStats(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.DeadLetter.classify(dlRows(spark, dir))

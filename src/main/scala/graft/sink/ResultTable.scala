@@ -62,14 +62,8 @@ final class ResultTable(val root: String) {
 
   private val dataDir = Paths.get(root, "data")
   private val commitDir = Paths.get(root, "_commits")
-  /** Commit-time hardlink view for streaming readers: a data file is
-    * linked here only AFTER its commit file lands, so a file stream
-    * over `pub/` observes exactly the committed snapshots (the
-    * commit-log-driven read `iceberg-spark-runtime` does natively). */
-  private val pubDir = Paths.get(root, "pub")
   Files.createDirectories(dataDir)
   Files.createDirectories(commitDir)
-  Files.createDirectories(pubDir)
 
   /** Materialized directory listing (Files.list streams hold an open
     * directory fd until closed — a long-lived streaming job commits
@@ -197,57 +191,6 @@ final class ResultTable(val root: String) {
   }
 
   /**
-   * Streaming read of the table — the downstream half of a multi-stage
-   * topology (stage 1 lands extracted rows here; stage 2 streams them
-   * into further stateful operators, each stage independently
-   * checkpointed and resumable).
-   *
-   * Snapshot-aware: the file stream reads the `pub/` hardlink view,
-   * which [[appendBatch]] populates only AFTER a batch's commit file
-   * lands. A batch orphaned by an upstream crash (data files written,
-   * no commit) is invisible here, and its replayed rewrite appears
-   * exactly once — the commit-log-driven semantics of
-   * `iceberg-spark-runtime`'s streaming read, which this class
-   * stands in for (SURVEY §7.0).
-   */
-  def readStream(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    // backfill: a table written before pub/ existed, or whose writer
-    // died between commit and publication and never replayed, must
-    // not be silently empty to streaming readers while read() sees
-    // its commits — publish is idempotent, so republishing every
-    // snapshot on open is cheap (link-exists fast path)
-    commitEntries().foreach(publishEntry)
-    spark.readStream.schema(schema).parquet(pubDir.toString)
-  }
-
-  /** Idempotent commit-time publication: hardlink a committed batch's
-    * data files into `pub/` for streaming readers. Crash windows are
-    * repaired on replay: died before the commit file → no links exist
-    * and the rewrite republishes; died mid-publication → the replayed
-    * [[appendBatch]] finds its key in the log and re-runs publish from
-    * the manifest before skipping the batch. */
-  private def publish(key: String): Unit =
-    commitEntries().find(_.key == key).foreach(publishEntry)
-
-  private def publishEntry(e: CommitEntry): Unit =
-    manifestFiles(e.fileName).zipWithIndex.foreach { case (f, i) =>
-      val link = pubDir.resolve(s"${e.key}-$i.parquet")
-      if (!Files.exists(link))
-        try Files.createLink(link, Paths.get(f))
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException => ()
-          // per-attempt data dirs mean a committed manifest's files
-          // cannot be clobbered by a same-key racer anymore; keep the
-          // guard defensively (external deletion must not kill the
-          // stream), but loudly
-          case _: java.nio.file.NoSuchFileException =>
-            System.err.println(
-              s"[ResultTable] publish: manifest file vanished ($f) — external deletion?")
-        }
-    }
-
-  /**
    * The foreachBatch writer. Commit-epoch dedup: a batchId already in
    * the log is skipped entirely (replay after checkpoint recovery).
    * Data files are written BEFORE the commit file; a crash between the
@@ -267,10 +210,7 @@ final class ResultTable(val root: String) {
   def appendBatch(queryId: String)(df: DataFrame, batchId: Long): Unit = {
     val key = s"$queryId-$batchId"
     val existing = commitEntries()
-    if (existing.exists(_.key == key)) {
-      publish(key) // repair a crash between commit and publication
-      return       // idempotent replay skip
-    }
+    if (existing.exists(_.key == key)) return // idempotent replay skip
     // unique attempt dir: a concurrent same-key committer must never
     // write into (and on loss, delete from) the dir another attempt's
     // manifest references — see the layout note in the class doc
@@ -315,11 +255,6 @@ final class ResultTable(val root: String) {
         _.sorted(java.util.Comparator.reverseOrder())
           .forEach(f => Files.deleteIfExists(f)))
     }
-    // a won CAS knows its own entry — publish without re-listing the
-    // log (the listing-per-commit cost is the log read Iceberg also
-    // pays; no reason to pay it twice per commit)
-    if (won) publishEntry(CommitEntry(seq, key, commitFileName(seq, key)))
-    else publish(key)
   }
 }
 

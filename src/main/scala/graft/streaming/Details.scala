@@ -10,37 +10,19 @@ import org.apache.spark.sql.functions._
  * stored under uid=CRC32(detailURL) and re-joined by the encoder,
  * encoders.go:193-227, nesting 1 block → object / n → array).
  *
- * Spark recast (north_star: "paginated multi-request assembly becomes
- * a stateful stream-stream join"): the parent's Path extractor emits
- * link keys (`__path_<field>` column, ExtractCompiler); the child side
- * is just another document stream whose doc_id is the link key. Batch
- * and streaming forms share the equi-join shape:
+ * Spark recast: the parent's Path extractor emits link keys
+ * (`__path_<field>` column, ExtractCompiler); the child side is just
+ * another document table whose doc_id is the link key. [[joinBatch]]
+ * joins link rows to child block rows on the link key and nests the
+ * matched blocks under `<field>_details` in (link order, child
+ * block_idx) order — the reference's sorted key map.
  *
- *  - [[joinBatch]]: child blocks grouped per child doc (ordered by
- *    block_idx — the reference's sorted key map), equi-joined on the
- *    link key, nested under `<field>_details` in link order.
- *  - [[joinStream]]: watermarked stream-stream join, link rows ⋈
- *    child rows within an event-time band; nesting happens at the
- *    sink (foreachBatch), where the joined rows of an epoch are
- *    grouped exactly like the batch form.
- *
- * Deployment note: Spark does not support arbitrary chaining of
- * flatMapGroupsWithState with further stateful operators in one
- * query, so the full stitch→extract→details pipeline runs as TWO
- * checkpointed queries decoupled by the exactly-once ResultTable:
- * query 1 lands extracted parent blocks (with `__path_*` link
- * columns), query 2 streams that table, explodes link rows, and joins
- * the child stream. Each stage is independently resumable and the
- * table boundary is the same idempotent commit log — the standard
- * multi-stage streaming topology at scale.
- *
- * Scale: the child aggregation shuffles on child doc_id (uniform);
- * the join shuffles both sides on link_key. A hot link key (many
- * parents pointing at one child doc — the reference's shared detail
- * page) skews the join; since the child side is one row per key after
- * aggregation, AQE's broadcast conversion or an explicit
- * `broadcast()` of the child side removes the skew entirely when the
- * child universe fits (common: detail pages ≪ listing rows).
+ * Scale: the join shuffles both sides on link_key, and the nesting
+ * aggregates per parent block. A hot link key (many parents pointing
+ * at one child doc — the reference's shared detail page) skews the
+ * join; AQE's broadcast conversion or an explicit `broadcast()` of
+ * the child side removes the skew when the child universe fits
+ * (common: detail pages ≪ listing rows).
  */
 object Details {
 
@@ -97,31 +79,5 @@ object Details {
       .drop(s"__path_$field")
       .withColumn(s"${field}_details",
         coalesce(col(s"${field}_details"), array()))
-  }
-
-  /**
-   * Streaming details join: link rows (from the extracted parent
-   * stream) ⋈ child doc stream, both watermarked, equi-join on
-   * link_key with an event-time band that bounds join state — child
-   * rows older than `bandSeconds` before / after the parent row are
-   * out of range, so both sides' state is evicted as the watermark
-   * passes (the reference bounds this implicitly by fetching children
-   * synchronously; we bound it explicitly per north_rule).
-   *
-   * Columns: parents must carry `p_time`, children `c_time` event
-   * timestamps; output = parent cols + child cols for every match.
-   */
-  def joinStream(
-      linkRows: DataFrame,
-      children: DataFrame,
-      watermarkDelay: String,
-      bandSeconds: Long): DataFrame = {
-    val p = linkRows.withWatermark("p_time", watermarkDelay)
-    val c = children.withWatermark("c_time", watermarkDelay)
-    p.join(c,
-      col("link_key") === col("c_doc_id") &&
-        col("c_time") >= col("p_time") - expr(s"interval $bandSeconds seconds") &&
-        col("c_time") <= col("p_time") + expr(s"interval $bandSeconds seconds"),
-      "inner")
   }
 }

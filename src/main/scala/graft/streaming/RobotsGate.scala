@@ -26,25 +26,13 @@ import org.apache.spark.sql.functions._
  */
 object RobotsGate {
 
-  /** One source's robots decision inputs: the robots.txt fetch status,
-    * the parsed allow/disallow path prefixes for our agent, and the
-    * non-standard Crawl-delay directive (0 = absent — reference
-    * fetch/robotstxt.go:77-84 getCrawlDelay). */
+  /** One source's robots decision inputs: the robots.txt fetch status
+    * and the parsed allow/disallow path prefixes for our agent. */
   final case class RobotsRules(
       source: String,
       status: Int,
       allows: Seq[String],
-      disallows: Seq[String],
-      crawlDelayMs: Long = 0L)
-
-  /** Per-source pacing delays from the Crawl-delay directives, for
-    * [[Pacing.pace]]'s perSourceDelayMs: sources without a directive
-    * fall back to the pacer's default (the reference uses FetchDelay
-    * when robots carries no Crawl-delay). O(#sources) — rides in the
-    * task closure like the broadcast rule table. */
-  def crawlDelays(rules: Seq[RobotsRules]): Map[String, Long] =
-    rules.iterator.filter(_.crawlDelayMs > 0)
-      .map(r => r.source -> r.crawlDelayMs).toMap
+      disallows: Seq[String])
 
   def rulesTable(spark: SparkSession, rules: Seq[RobotsRules]): DataFrame = {
     import spark.implicits._

@@ -2,10 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** One request-shaped event on the session stream: a row keyed by
+/** One request-shaped event of a session: a row keyed by
   * `user_token` that may carry new cookies to persist (the response's
   * Set-Cookie analog), as `"name=value"` strings. */
 final case class CookieEvent(
@@ -23,30 +20,27 @@ final case class HydratedEvent(
     event_time: Timestamp,
     jar: Array[String])
 
-/** Jar state: flat sorted "name=value" strings (a Map here would
-  * encode through Catalyst's generic map path and dominate state
-  * commits — same lesson as StitchState's flat arrays). */
+/** Fold state of one token's jar: its "name=value" cookies in
+  * first-insertion order, and the time of its last event
+  * (Long.MinValue = none yet). */
 final case class JarState(cookies: Array[String], lastEventMs: Long)
 
 /**
- * Cookie/session continuity as a first-class keyed-state operator —
+ * Cookie/session continuity as a per-token fold —
  * the recast of the reference's per-UserToken cookie jar
  * (fetch/service.go:36-106: hydrate jar from storage before the
  * fetch, persist the mutated jar after; storage type `Cookies`,
  * storage/storage.go:19-23, with TTL expiry `ITEM_EXPIRE_IN`,
  * diskv.go:49-81).
  *
- * `flatMapGroupsWithState` keyed by `user_token`: each event is
- * emitted with the jar as hydrated before its own `set_cookies`
- * merge; the merge then persists for subsequent events. An idle
- * session past `ttlMs` of event time is evicted (the storage TTL),
- * so a later event starts with an empty jar.
+ * A fold per `user_token` ([[foldEvents]]): each event is emitted
+ * with the jar as hydrated before its own `set_cookies` merge; the
+ * merge then persists for subsequent events. A session idle past
+ * `ttlMs` of event time is emptied (the storage TTL), so a later event
+ * starts with an empty jar.
  *
- * Scale: state is O(cookies) per live session, evicted by event-time
- * timeout; the only shuffle keys by user_token (uniform). Batch
- * iterators are sorted by event time before folding, so out-of-order
- * arrival within a micro-batch cannot leak a later cookie into an
- * earlier event's jar.
+ * Scale: the fold state is O(cookies) per session; the only shuffle
+ * keys by user_token (uniform).
  */
 object SessionJar {
 
@@ -62,13 +56,13 @@ object SessionJar {
     }
   }
 
-  /** The semantics, shared by the streaming operator ([[hydrate]])
-    * AND the batch image (graft.queries.TokenEngine.sessionJarFold —
-    * the DuckDB-checked driver row): fold one batch's events (sorted into
-    * event-time order so out-of-order arrival within a micro-batch
-    * cannot leak a later cookie into an earlier event's jar) over the
-    * jar state; TTL can also lapse BETWEEN events inside one batch
-    * window. */
+  /** Fold one slice of a token's events over the jar state `init`,
+    * returning the hydrated events and the state a next slice starts
+    * from. Events are sorted into event-time order first, so
+    * out-of-order arrival cannot leak a later cookie into an earlier
+    * event's jar; the TTL can lapse between any two events. The batch
+    * image (graft.queries.TokenEngine.sessionJarFold, the
+    * DuckDB-checked driver row) runs it per token. */
   private[graft] def foldEvents(
       token: String,
       rows: Iterator[CookieEvent],
@@ -86,37 +80,5 @@ object SessionJar {
       hydrated
     }
     (out, s)
-  }
-
-  private def update(ttlMs: Long)(
-      token: String,
-      rows: Iterator[CookieEvent],
-      state: GroupState[JarState]): Iterator[HydratedEvent] = {
-    if (state.hasTimedOut) {
-      state.remove() // TTL expiry — the diskv Expired() analog
-      Iterator.empty
-    } else {
-      val (out, s) = foldEvents(token, rows,
-        state.getOption.getOrElse(JarState(Array.empty, Long.MinValue)), ttlMs)
-      state.update(s)
-      state.setTimeoutTimestamp(
-        math.max(s.lastEventMs + ttlMs, state.getCurrentWatermarkMs() + 1))
-      out.iterator
-    }
-  }
-
-  /** The operator: session-hydrated events, watermark-bounded state.
-    * The reference's default TTL is ITEM_EXPIRE_IN = 86400 s. */
-  def hydrate(
-      events: Dataset[CookieEvent],
-      ttlMs: Long,
-      watermarkDelay: String): Dataset[HydratedEvent] = {
-    implicit val outEnc = Encoders.product[HydratedEvent]
-    implicit val stEnc = Encoders.product[JarState]
-    events
-      .withWatermark("event_time", watermarkDelay)
-      .groupByKey(_.user_token)(Encoders.STRING)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update(ttlMs))
   }
 }

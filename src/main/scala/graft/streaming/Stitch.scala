@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.gen.Fragment
 
@@ -125,6 +126,12 @@ object StitchState {
  * `flatMapGroupsWithState` itself, which filters input rows older than
  * the watermark before [[update]] sees them.
  *
+ * Every live fragment passes [[DeadLetter.status]] before it is folded:
+ * the first poisoned one (no tokens, a token count that disagrees with
+ * `n_tok`, a token outside the vocabulary) fails the query with its
+ * doc_id, page_idx and status. Its batch never commits, and a restart
+ * replays it and fails again until the input is fixed.
+ *
  * Scale: state is per-in-flight-document, O(pages) each; the shuffle
  * into this operator partitions by doc_id (hash — uniformly spread, so
  * no salting needed here; source-keyed skew is handled at the pacing/
@@ -159,6 +166,7 @@ object Stitch {
         .toArray.sortBy(f => (f.event_time.getTime, f.frag_idx))
       var s = state.getOption.orNull
       live.foreach { f =>
+        screen(f)
         val prev = if (s == null) StitchState.empty else s
         s = prev.addPage(f.page_idx, f.tokens, f.source, f.event_time.getTime)
       }
@@ -170,6 +178,14 @@ object Stitch {
       }
       Iterator.empty
     }
+  }
+
+  private def screen(f: Fragment): Unit = {
+    val toks = if (f.tokens == null) null else UnsafeArrayData.fromPrimitiveArray(f.tokens)
+    val status = DeadLetter.status(toks, f.n_tok).toString
+    if (status != DeadLetter.Ok)
+      throw new IllegalArgumentException(
+        s"poisoned fragment: doc_id=${f.doc_id} page_idx=${f.page_idx} status=$status")
   }
 
   /** Frontier dedup and session assembly in ONE stateful operator

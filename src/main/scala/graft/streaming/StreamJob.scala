@@ -15,7 +15,9 @@ import graft.sink.ResultTable
  * {{{
  *   source (fragment stream)
  *     → limitPages + watermark                         [narrow]
- *     → flatMapGroupsWithState stitch by doc_id        [frontier dedup +
+ *     → flatMapGroupsWithState stitch by doc_id        [screen (fail on a
+ *                                                       poisoned fragment) +
+ *                                                       frontier dedup +
  *                                                       session assembly]
  *     → ExtractCompiler (segment → part columns)       [narrow, codegen]
  *     → foreachBatch → ResultTable                     [exactly-once sink]
@@ -51,24 +53,18 @@ object StreamJob {
       sessionGapMs: Long,
       trigger: Trigger): StreamingQuery = {
     val assembled = Stitch.stitch(limitPages(fragments, spec), watermarkDelay, sessionGapMs)
-    startSink(extractStage(assembled, spec), table, checkpointDir, queryId, trigger)
-  }
-
-  /** Start `df` as append stream `queryId` whose micro-batches land in
-    * `table`, each exactly once (the sink of every engine stream). */
-  private[streaming] def startSink(df: DataFrame, table: ResultTable, checkpointDir: String,
-      queryId: String, trigger: Trigger): StreamingQuery =
-    start(df.sparkSession, df.writeStream
+    start(fragments.sparkSession, extractStage(assembled, spec).writeStream
       .queryName(queryId)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch(table.appendBatch(queryId) _))
+  }
 
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
-  /** Start an engine stream so that its tasks share the default
-    * executor class loader — every engine query starts here.
+  /** Start the engine stream so that its tasks share the default
+    * executor class loader.
     *
     * `start()` runs the query on a clone of `spark`'s session. With
     * artifact isolation on (the Spark 4.1 default), each clone's tasks
@@ -82,7 +78,7 @@ object StreamJob {
     * The clone copies the conf at `start()`, so the caller's own value
     * is restored right after; starts are serialized so that two of
     * them cannot restore each other's temporary value. */
-  def start(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery = synchronized {
+  private def start(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery = synchronized {
     val prev = spark.conf.getOption(ArtifactIsolation)
     spark.conf.set(ArtifactIsolation, false)
     try writer.start()

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import graft.functions.{TokenKernels, VectorKernels}
 import graft.gen.TokenGen
 import graft.model.TokenCodec
+import graft.streaming.DeadLetter
 
 /**
  * One native kernel: a static method of a kernel object (plain code in
@@ -26,6 +27,8 @@ import graft.model.TokenCodec
  * A kernel with a [[Kernel.Vector]] input reads float and double
  * vectors alike: `method` takes one `isFloat` flag per vector after its
  * other arguments, which [[FloatOrDouble]] appends as literals.
+ * A kernel yields null on a null input unless `propagateNull` is off;
+ * then the method receives the null and decides.
  *
  * Lives in the org.apache.spark.sql package tree because
  * `ExpressionUtils` and `TypeCollection` are `private[sql]`.
@@ -37,7 +40,8 @@ final case class Kernel(
     method: String,
     returns: DataType,
     inputs: Seq[AbstractDataType],
-    ints: Seq[(String, Option[Int])] = Nil) {
+    ints: Seq[(String, Option[Int])] = Nil,
+    propagateNull: Boolean = true) {
 
   def node(args: Seq[Expression]): Expression =
     if (inputs.contains(Kernel.Vector)) FloatOrDouble(this, args)
@@ -49,7 +53,8 @@ final case class Kernel(
   private[graft] def argTypes: Seq[AbstractDataType] = inputs ++ ints.map(_ => IntegerType)
 
   private[graft] def invoke(args: Seq[Expression], types: Seq[AbstractDataType]): Expression =
-    StaticInvoke(obj.getClass, returns, method, args, inputTypes = types, returnNullable = false)
+    StaticInvoke(obj.getClass, returns, method, args, inputTypes = types,
+      propagateNull = propagateNull, returnNullable = false)
 }
 
 object Kernel {
@@ -118,11 +123,14 @@ object Kernel {
     Seq(Words, Longs, Longs, LongType))
   val ivfProbes = Kernel("", "",
     VectorKernels, "probeCells", Ints, Seq(Vector, Planes), Seq("n_probe" -> None))
+  val fragmentStatus = Kernel("", "",
+    DeadLetter, "status", StringType, Seq(ArrayType(IntegerType), IntegerType),
+    propagateNull = false)
 
   val all: Seq[Kernel] = Seq(tokenBlocks, tokenFields, tokenPayloads, tokenDecode,
     tokenDecodeAll, tokenFindAll, tokenFindAllFlat, tokenIntJoin, tokenFirstTagText, synthPage,
     graftCosine, graftSimhash64, graftShingles, graftGramHashes, graftWinnow,
-    hyperBucket, minhashSig, ivfProbes)
+    hyperBucket, minhashSig, ivfProbes, fragmentStatus)
 }
 
 /** The float/double flags of a [[Kernel]] with [[Kernel.Vector]]

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.gen.{Fragment, TokenGen}
 import graft.model._
@@ -130,77 +130,22 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("politeness pacing: deterministic per-source schedule with min spacing") {
-    val mem = MemoryStream[(String, String, Timestamp)]
-    val out = Pacing.pace(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("pace_t").outputMode("append").start()
-    try {
-      // burst of 4 rows on one source at the same event time + 1 on another
-      mem.addData(
-        ("d1", "hot", ts(0)), ("d2", "hot", ts(0)), ("d3", "hot", ts(0)),
-        ("d4", "hot", ts(2)), ("e1", "cold", ts(0)))
-      q.processAllAvailable()
-      val rows = spark.table("pace_t").orderBy("scheduled_time", "doc_id")
-        .as[PacedRow].collect()
-      val hot = rows.filter(_.source == "hot").map(_.scheduled_time.getTime)
-      assert(hot.toSeq == Seq(0L, 500L, 1000L, 2000L).map(TokenGen.BASE_EPOCH_MS + _),
-        s"hot schedule: ${hot.toSeq}")
-      val cold = rows.filter(_.source == "cold")
-      assert(cold.head.scheduled_time == ts(0), "cold source unthrottled")
-      // next batch continues from persisted state
-      mem.addData(("d5", "hot", ts(2)))
-      q.processAllAvailable()
-      val d5 = spark.table("pace_t").filter($"doc_id" === "d5").as[PacedRow].head()
-      assert(d5.scheduled_time.getTime == TokenGen.BASE_EPOCH_MS + 2500L,
-        "spacing enforced across batches via state")
-    } finally q.stop()
-  }
-
-  test("politeness pacing honors per-source robots Crawl-delay, default for the rest") {
-    // reference fetch/robotstxt.go:77-84: Crawl-delay per domain when
-    // present; FetchDelay fallback otherwise (scrape.go:702-709)
-    val delays = RobotsGate.crawlDelays(Seq(
-      RobotsGate.RobotsRules("slow", 200, Nil, Nil, crawlDelayMs = 2000L),
-      RobotsGate.RobotsRules("nodirective", 200, Nil, Nil))) // 0 -> absent
-    assert(delays == Map("slow" -> 2000L))
-    val mem = MemoryStream[(String, String, Timestamp)]
-    val out = Pacing.pace(mem.toDS(), perSourceDelayMs = delays)
-    val q = out.writeStream.format("memory").queryName("pace_cd")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        ("s1", "slow", ts(0)), ("s2", "slow", ts(0)), ("s3", "slow", ts(0)),
-        ("f1", "fast", ts(0)), ("f2", "fast", ts(0)))
-      q.processAllAvailable()
-      val rows = spark.table("pace_cd").as[PacedRow].collect()
-      val slow = rows.filter(_.source == "slow").map(_.scheduled_time.getTime).sorted
-      val fast = rows.filter(_.source == "fast").map(_.scheduled_time.getTime).sorted
-      assert(slow.toSeq == Seq(0L, 2000L, 4000L).map(TokenGen.BASE_EPOCH_MS + _),
-        s"slow: ${slow.toSeq}")
-      assert(fast.toSeq == Seq(0L, 500L).map(TokenGen.BASE_EPOCH_MS + _),
-        s"fast: ${fast.toSeq}")
-    } finally q.stop()
-  }
-
-  test("tumbling window aggregate over a doc stream (watermark, append mode)") {
-    val mem = MemoryStream[AssembledDoc]
-    val agg = WindowAggs.tumblingStream(mem.toDF(), "10 seconds", "5 seconds")
-    val q = agg.writeStream.format("memory").queryName("win_t").outputMode("append").start()
-    try {
-      mem.addData(
-        AssembledDoc("a", Array(1), 1, "s1", ts(1), 1),
-        AssembledDoc("b", Array(1, 2), 2, "s1", ts(3), 1),
-        AssembledDoc("c", Array(1), 1, "s2", ts(12), 1))
-      q.processAllAvailable()
-      mem.addData(AssembledDoc("~f", Array(1), 1, "s3", ts(100), 1))
-      q.processAllAvailable()
-      mem.addData(AssembledDoc("~f2", Array(1), 1, "s3", ts(200), 1))
-      q.processAllAvailable()
-      val rows = spark.table("win_t").orderBy("w_start", "source").collect()
-      assert(rows.exists(r => r.getAs[String]("source") == "s1" &&
-        r.getAs[Long]("n_docs") == 2 && r.getAs[Long]("total_tokens") == 3))
-      assert(rows.exists(r => r.getAs[String]("source") == "s2" &&
-        r.getAs[Long]("n_docs") == 1))
-    } finally q.stop()
+    // a burst of 4 rows on one source at the same event time, then one
+    // 2 s later: 500 ms apart, never before a row's own event time
+    val burst = Seq("d1" -> 0L, "d2" -> 0L, "d3" -> 0L, "d4" -> 2000L)
+    val (hot, last) = Pacing.foldSchedule(500L, burst, Long.MinValue)
+    assert(hot == Seq(("d1", 0L, 0L), ("d2", 0L, 500L), ("d3", 0L, 1000L), ("d4", 2000L, 2000L)),
+      s"hot schedule: $hot")
+    assert(Pacing.foldSchedule(500L, burst, Long.MinValue) == (hot, last), "deterministic")
+    // the next slice continues from the previous slice's last schedule
+    val (next, last2) = Pacing.foldSchedule(500L, Seq("d5" -> 2000L), last)
+    assert(next == Seq(("d5", 2000L, 2500L)) && last2 == 2500L,
+      "spacing enforced across slices via the carried state")
+    assert(Pacing.foldSchedule(500L, Seq("e1" -> 0L), Long.MinValue)._1 == Seq(("e1", 0L, 0L)),
+      "a lone row is unthrottled")
+    // a per-source delay is just the fold's parameter
+    assert(Pacing.foldSchedule(2000L, Seq("s1" -> 0L, "s2" -> 0L, "s3" -> 0L), Long.MinValue)
+      ._1.map(_._3) == Seq(0L, 2000L, 4000L))
   }
 
   test("exactly-once sink: replayed batch id is a no-op; lineage columns present") {
@@ -337,11 +282,10 @@ class StreamingSpec extends SparkSuite {
     assert(table.snapshots() == Seq("q-0", "q-1"))
   }
 
-  test("snapshot-aware streaming read: orphaned uncommitted batch invisible; foreign commit name skipped") {
+  test("snapshot read hides an orphan dir and a foreign commit; a replay commits once") {
     val dir = Files.createTempDirectory("graft-snap").toString
     val table = new ResultTable(dir)
-    val committed = Seq(("a", 1), ("b", 2)).toDF("k", "v")
-    table.appendBatch("q")(committed, 0L)
+    table.appendBatch("q")(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0L)
     // simulate an upstream crash between data write and commit: data
     // files land under data/ with NO commit file
     Seq(("orphan", 99)).toDF("k", "v")
@@ -351,35 +295,16 @@ class StreamingSpec extends SparkSuite {
     // not surface the orphan)
     Files.writeString(java.nio.file.Paths.get(s"$dir/_commits/README.json"), "junk")
     assert(table.snapshots() == Seq("q-0"))
-    assert(table.read(spark).count() == 2)
-    val schema = table.read(spark).schema
-    val q = table.readStream(spark, schema)
-      .writeStream.format("memory").queryName("snap_t").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val seen = spark.table("snap_t").select("k").as[String].collect().toSet
-      assert(seen == Set("a", "b"), s"streaming reader saw: $seen")
-      // the replayed rewrite of the orphan commits normally and appears once
-      table.appendBatch("q")(Seq(("c", 3)).toDF("k", "v"), 9L)
-      q.processAllAvailable()
-      val after = spark.table("snap_t").select("k").as[String].collect().toList.sorted
-      assert(after == List("a", "b", "c"), s"after replay: $after")
-    } finally q.stop()
-
-    // backfill: a table whose pub/ view is missing (pre-pub-era table,
-    // or writer died between commit and publication and never
-    // replayed) must repopulate it on streaming open from the commit
-    // log, not stream empty while read() sees the commits
-    val pub = java.nio.file.Paths.get(s"$dir/pub")
-    scala.util.Using.resource(Files.list(pub))(_.forEach(p => Files.delete(p)))
+    assert(table.read(spark).select("k").as[String].collect().toSet == Set("a", "b"))
+    // the replayed rewrite of the orphan's key commits normally, once,
+    // and a second replay of it is a no-op
+    val rewrite = Seq(("c", 3)).toDF("k", "v")
+    table.appendBatch("q")(rewrite, 9L)
+    table.appendBatch("q")(rewrite, 9L)
     val reopened = new ResultTable(dir)
-    val q2 = reopened.readStream(spark, schema)
-      .writeStream.format("memory").queryName("snap_t2").outputMode("append").start()
-    try {
-      q2.processAllAvailable()
-      val seen2 = spark.table("snap_t2").select("k").as[String].collect().toList.sorted
-      assert(seen2 == List("a", "b", "c"), s"backfill missed commits: $seen2")
-    } finally q2.stop()
+    assert(reopened.snapshots() == Seq("q-0", "q-9"))
+    val after = reopened.read(spark).select("k").as[String].collect().toList.sorted
+    assert(after == List("a", "b", "c"), s"after replay: $after")
   }
 
   test("byQueryParam pagination expands start keys into bounded page-key sequences") {
@@ -396,68 +321,73 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("session jar: cookies persist per user_token, hydrate before merge, expire on TTL") {
-    val mem = MemoryStream[CookieEvent]
-    val out = SessionJar.hydrate(mem.toDS(), ttlMs = 60000L, watermarkDelay = "5 seconds")
-    val q = out.writeStream.format("memory").queryName("jar_t").outputMode("append").start()
-    try {
-      def ev(tok: String, doc: String, sec: Long, set: String*) =
-        CookieEvent(tok, doc, ts(sec), set.toArray)
-      // u1: r1 sets a cookie; r2 (later, same batch, added out of order)
-      // must see it but not its own; u2 independent
-      mem.addData(ev("u1", "r2", 10, "b=2"), ev("u1", "r1", 5, "a=1"),
-        ev("u2", "s1", 5))
-      q.processAllAvailable()
-      // u1 next batch: sees a=1 AND b=2; overwrite a
-      mem.addData(ev("u1", "r3", 20, "a=9"))
-      q.processAllAvailable()
-      // beyond TTL (60s after last event): jar must be empty again
-      mem.addData(ev("u1", "r4", 200))
-      q.processAllAvailable()
-      val rows = spark.table("jar_t").as[HydratedEvent].collect()
-        .map(e => e.doc_id -> e.jar.toSeq.sorted).toMap
-      assert(rows("r1") == Seq(), "first request hydrates an empty jar")
-      assert(rows("r2") == Seq("a=1"), "in-batch order is event-time order")
-      assert(rows("s1") == Seq(), "tokens are isolated")
-      assert(rows("r3") == Seq("a=1", "b=2"), "jar persisted across batches")
-      assert(rows("r4") == Seq(), s"TTL must empty the jar, got ${rows("r4")}")
-    } finally q.stop()
+    def ev(tok: String, doc: String, sec: Long, set: String*) =
+      CookieEvent(tok, doc, ts(sec), set.toArray)
+    def fold(tok: String, init: JarState, events: CookieEvent*) =
+      SessionJar.foldEvents(tok, events.iterator, init, ttlMs = 60000L)
+    val empty = JarState(Array.empty, Long.MinValue)
+    // u1: r1 sets a cookie; r2 (later, same slice, passed out of order)
+    // must see it but not its own; u2 independent
+    val (u1a, s1) = fold("u1", empty, ev("u1", "r2", 10, "b=2"), ev("u1", "r1", 5, "a=1"))
+    val (u2, _) = fold("u2", empty, ev("u2", "s1", 5))
+    // u1 next slice, from the carried state: sees a=1 AND b=2; overwrite a
+    val (u1b, s2) = fold("u1", s1, ev("u1", "r3", 20, "a=9"))
+    assert(s2.cookies.toSeq == Seq("a=9", "b=2"), "last write wins, first-insertion order")
+    // beyond TTL (60s after last event): jar must be empty again
+    val (u1c, _) = fold("u1", s2, ev("u1", "r4", 200))
+    // the TTL also lapses between two events of one slice
+    val (u3, _) = fold("u3", empty, ev("u3", "t1", 0, "x=1"), ev("u3", "t2", 100))
+    assert(u1a.map(_.doc_id).toSeq == Seq("r1", "r2"), "emitted in event-time order")
+    val rows = (u1a ++ u2 ++ u1b ++ u1c ++ u3).map(e => e.doc_id -> e.jar.toSeq.sorted).toMap
+    assert(rows("r1") == Seq(), "first request hydrates an empty jar")
+    assert(rows("r2") == Seq("a=1"), "in-slice order is event-time order")
+    assert(rows("s1") == Seq(), "tokens are isolated")
+    assert(rows("r3") == Seq("a=1", "b=2"), "jar persisted across slices")
+    assert(rows("r4") == Seq(), s"TTL must empty the jar, got ${rows("r4")}")
+    assert(rows("t2") == Seq(), "TTL lapses inside one slice")
   }
 
-  test("dead-letter: poisoned fragments neither crash the pipeline nor vanish") {
-    val base = Files.createTempDirectory("graft-dlq")
+  test("StreamJob.run stops on a poisoned fragment and commits nothing of its batch") {
+    val base = Files.createTempDirectory("graft-poison")
     val table = new ResultTable(base.resolve("t").toString)
-    val quar = new ResultTable(base.resolve("q").toString)
-    val mem = MemoryStream[Fragment]
-    val (qMain, qDlq) = DeadLetter.runWithQuarantine(
-      mem.toDS(), spec, table, quar,
-      base.resolve("ck_main").toString, base.resolve("ck_dlq").toString, "dlq",
-      watermarkDelay = "5 seconds", sessionGapMs = 5000L,
-      trigger = Trigger.ProcessingTime(0L))
+    def launch(mem: MemoryStream[Fragment], queryId: String) =
+      StreamJob.run(mem.toDS(), spec, table, base.resolve(s"ck_$queryId").toString, queryId,
+        watermarkDelay = "5 seconds", sessionGapMs = 5000L, trigger = Trigger.ProcessingTime(0L))
+    val clean = MemoryStream[Fragment]
+    val q = launch(clean, "clean")
     try {
-      val poisonBadCount = Fragment("poison_count", Array(2, 3, 100, 1), 99, "s1",
-        ts(100), 0, 0, is_dup = false, is_late = false)
-      val poisonEmpty = Fragment("poison_empty", Array.empty, 0, "s1",
-        ts(101), 0, 0, is_dup = false, is_late = false)
-      val poisonRange = Fragment("poison_range", Array(2, 3, 40000, 1), 4, "s1",
-        ts(102), 0, 0, is_dup = false, is_late = false)
-      mem.addData(frag("clean1", 0, d2, 100), poisonBadCount, poisonEmpty, poisonRange)
-      qMain.processAllAvailable(); qDlq.processAllAvailable()
-      mem.addData(frag("~flush", 0, Array(2), 1000))
-      qMain.processAllAvailable()
-      mem.addData(frag("~flush2", 0, Array(2), 2000))
-      qMain.processAllAvailable()
+      clean.addData(frag("clean1", 0, d2, 100))
+      q.processAllAvailable()
+      clean.addData(frag("~flush", 0, Array(2), 1000))
+      q.processAllAvailable()
+      clean.addData(frag("~flush2", 0, Array(2), 2000))
+      q.processAllAvailable()
+    } finally q.stop()
+    val commits = table.snapshots()
+    val cleanRows = table.read(spark).drop("_batch_id", "_part_id").collect().map(_.toString).sorted
+    assert(cleanRows.exists(_.contains("clean1")), cleanRows.mkString("\n"))
 
-      val mainDocs = table.read(spark).select("doc_id").as[String].collect().toSet
-      assert(mainDocs.contains("clean1"), "clean row must flow through")
-      assert(!mainDocs.exists(_.startsWith("poison")),
-        "poisoned rows must not reach the result table")
-      val statuses = quar.read(spark).select("doc_id", "status")
-        .as[(String, String)].collect().toMap
-      assert(statuses == Map(
-        "poison_count" -> DeadLetter.BadTokenCount,
-        "poison_empty" -> DeadLetter.EmptyPayload,
-        "poison_range" -> DeadLetter.TokenOutOfRange), s"got $statuses")
-    } finally { qMain.stop(); qDlq.stop() }
+    def poisoned(doc: String, toks: Array[Int], nTok: Int) =
+      Fragment(doc, toks, nTok, "s1", ts(100), 0, 0, is_dup = false, is_late = false)
+    Seq(
+      poisoned("poison_count", Array(2, 3, 100, 1), 99) -> DeadLetter.BadTokenCount,
+      poisoned("poison_empty", Array.empty, 0) -> DeadLetter.EmptyPayload,
+      poisoned("poison_high", Array(2, 3, 40000, 1), 4) -> DeadLetter.TokenOutOfRange,
+      poisoned("poison_negative", Array(2, 3, -7, 1), 4) -> DeadLetter.TokenOutOfRange
+    ).foreach { case (f, status) =>
+      val mem = MemoryStream[Fragment]
+      val pq = launch(mem, f.doc_id)
+      try {
+        mem.addData(f)
+        val e = intercept[StreamingQueryException](pq.processAllAvailable())
+        assert(e.getMessage.contains(s"doc_id=${f.doc_id} page_idx=0 status=$status"),
+          e.getMessage)
+        assert(!pq.isActive, s"${f.doc_id}: the query must stop")
+      } finally pq.stop()
+      assert(table.snapshots() == commits, s"${f.doc_id}: its batch committed")
+      val rows = table.read(spark).drop("_batch_id", "_part_id").collect().map(_.toString).sorted
+      assert(rows.toSeq == cleanRows.toSeq, s"${f.doc_id}: clean rows changed")
+    }
   }
 
   test("dead_letter driver row: statuses partition the poisoned table, every class hit") {
